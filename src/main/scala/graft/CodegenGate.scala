@@ -17,7 +17,14 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
   * `ShingleHashes.eval` static-forwarder clash ran EVERY
   * `shingle_hashes` stage interpreted for half a round while 153/153
   * correctness and the wall-time bench both stayed green — only the
-  * scrolled-past WARN knew.
+  * scrolled-past WARN knew. That clash needed a case class sharing the
+  * kernel object's name; the table natives
+  * ([[graft.functions.Natives]]) now call kernel objects with no
+  * companion class, so it cannot recur there. What still holds: a
+  * kernel method the generated `StaticInvoke` call cannot find, or any
+  * other generated Java that fails to compile, degrades just as
+  * silently — PropertySpec compiles every native directly, and this
+  * gate counts the rest.
   *
   * Same discipline as [[TaskBinaryGate]]: the WARN becomes a counted,
   * asserted artifact field. [[Bench]] reports `codegen_fallback_warns`

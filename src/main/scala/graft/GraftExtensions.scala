@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{AdcLookup, AsOfNeighbors, AsOfPick, BracketChars, CdfBelow, DotLong, LetterRuns, LshPlaneBits, MinhashMins, NfkcFold, PiiMask, PqCodes, QualityCharStats, QuantizedDot, QuantizedDotLong, RemoveTokenSpans, ShingleHashes, SliceId, SpaceBigramCounts, SpaceSegments, SpaceTokenCounts, SpaceTokenStats, StripMarkup, SubwordStats, ZOrderKey}
 
 /** SQL-surface registration for the engine's native extensions:
-  * `spark.sql.extensions=graft.GraftExtensions` makes
-  * `quantized_dot(a, b)` / `lsh_plane_bits` available to `spark.sql(...)`
-  * users alongside the Column API ([[graft.functions.VectorOps]]), registers
-  * the `graft_timestamps` table-valued function ([[graft.plans.TimestampsTvf]]),
+  * `spark.sql.extensions=graft.GraftExtensions` makes every native
+  * function of [[graft.functions.Natives.builders]] (`quantized_dot(a, b)`,
+  * `lsh_plane_bits`, …) available to `spark.sql(...)` users alongside
+  * the Column API ([[graft.functions.VectorOps]]), registers the
+  * `graft_timestamps` table-valued function ([[graft.plans.TimestampsTvf]]),
   * and installs the whole-operator path (SURVEY §7.3 option c): the
   * [[graft.plans.RewriteGlobalRankWindow]] optimizer rule +
   * [[graft.plans.GlobalSeqStrategy]] planner strategy that replace
@@ -51,202 +51,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(graft.plans.GraftTvfs.getClass.getName,
         graft.plans.GraftTvfs.dupCutsName),
       graft.plans.GraftTvfs.buildDupCuts _))
-    ext.injectFunction((
-      new FunctionIdentifier("quantized_dot"),
-      new ExpressionInfo(classOf[QuantizedDot].getName, "quantized_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"quantized_dot requires exactly 2 arguments, got ${children.size}")
-        QuantizedDot(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("slice_id"),
-      new ExpressionInfo(classOf[SliceId].getName, "slice_id"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"slice_id requires exactly 2 arguments, got ${children.size}")
-        SliceId(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("zorder_key"),
-      new ExpressionInfo(classOf[ZOrderKey].getName, "zorder_key"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZOrderKey(children)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_mins"),
-      new ExpressionInfo(classOf[MinhashMins].getName, "minhash_mins"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"minhash_mins requires exactly 2 arguments, got ${children.size}")
-        MinhashMins(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("asof_pick"),
-      new ExpressionInfo(classOf[AsOfPick].getName, "asof_pick"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 3,
-          s"asof_pick requires exactly 3 arguments, got ${children.size}")
-        AsOfPick(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("asof_neighbors"),
-      new ExpressionInfo(classOf[AsOfNeighbors].getName, "asof_neighbors"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 3,
-          s"asof_neighbors requires exactly 3 arguments, got ${children.size}")
-        AsOfNeighbors(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("cdf_below"),
-      new ExpressionInfo(classOf[CdfBelow].getName, "cdf_below"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 3,
-          s"cdf_below requires exactly 3 arguments, got ${children.size}")
-        CdfBelow(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("letter_runs"),
-      new ExpressionInfo(classOf[LetterRuns].getName, "letter_runs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"letter_runs requires exactly 1 argument, got ${children.size}")
-        LetterRuns(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bracket_chars"),
-      new ExpressionInfo(classOf[BracketChars].getName, "bracket_chars"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"bracket_chars requires exactly 1 argument, got ${children.size}")
-        BracketChars(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("strip_markup"),
-      new ExpressionInfo(classOf[StripMarkup].getName, "strip_markup"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"strip_markup requires exactly 1 argument, got ${children.size}")
-        StripMarkup(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("subword_stats"),
-      new ExpressionInfo(classOf[SubwordStats].getName, "subword_stats"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"subword_stats requires exactly 1 argument, got ${children.size}")
-        SubwordStats(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("quality_char_stats"),
-      new ExpressionInfo(classOf[QualityCharStats].getName, "quality_char_stats"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"quality_char_stats requires exactly 1 argument, got ${children.size}")
-        QualityCharStats(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("space_token_stats"),
-      new ExpressionInfo(classOf[SpaceTokenStats].getName, "space_token_stats"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"space_token_stats requires exactly 2 arguments, got ${children.size}")
-        SpaceTokenStats(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("space_token_counts"),
-      new ExpressionInfo(classOf[SpaceTokenCounts].getName, "space_token_counts"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"space_token_counts requires exactly 1 argument, got ${children.size}")
-        SpaceTokenCounts(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("remove_token_spans"),
-      new ExpressionInfo(classOf[RemoveTokenSpans].getName, "remove_token_spans"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"remove_token_spans requires exactly 2 arguments, got ${children.size}")
-        RemoveTokenSpans(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("space_bigram_counts"),
-      new ExpressionInfo(classOf[SpaceBigramCounts].getName, "space_bigram_counts"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"space_bigram_counts requires exactly 1 argument, got ${children.size}")
-        SpaceBigramCounts(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"shingle_hashes requires exactly 2 arguments, got ${children.size}")
-        ShingleHashes(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("space_segments"),
-      new ExpressionInfo(classOf[SpaceSegments].getName, "space_segments"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"space_segments requires exactly 2 arguments, got ${children.size}")
-        SpaceSegments(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("nfkc_fold"),
-      new ExpressionInfo(classOf[NfkcFold].getName, "nfkc_fold"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"nfkc_fold requires exactly 1 argument, got ${children.size}")
-        NfkcFold(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("pii_mask"),
-      new ExpressionInfo(classOf[PiiMask].getName, "pii_mask"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1,
-          s"pii_mask requires exactly 1 argument, got ${children.size}")
-        PiiMask(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("lsh_plane_bits"),
-      new ExpressionInfo(classOf[LshPlaneBits].getName, "lsh_plane_bits"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"lsh_plane_bits requires exactly 2 arguments, got ${children.size}")
-        LshPlaneBits(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_long"),
-      new ExpressionInfo(classOf[DotLong].getName, "dot_long"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"dot_long requires exactly 2 arguments, got ${children.size}")
-        DotLong(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("quantized_dot_long"),
-      new ExpressionInfo(classOf[QuantizedDotLong].getName, "quantized_dot_long"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"quantized_dot_long requires exactly 2 arguments, got ${children.size}")
-        QuantizedDotLong(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("pq_codes"),
-      new ExpressionInfo(classOf[PqCodes].getName, "pq_codes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 3,
-          s"pq_codes requires exactly 3 arguments, got ${children.size}")
-        PqCodes(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("adc_lookup"),
-      new ExpressionInfo(classOf[AdcLookup].getName, "adc_lookup"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2,
-          s"adc_lookup requires exactly 2 arguments, got ${children.size}")
-        AdcLookup(children(0), children(1))
-      }))
+    graft.functions.Natives.builders.foreach { b =>
+      ext.injectFunction((new FunctionIdentifier(b.name),
+        new ExpressionInfo(b.cls.getName, b.name), b.apply _))
+    }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** The probe-side kernel of the broadcast as-of join
   * ([[graft.operators.AsOfJoin.asOfBroadcast]]): given a key's reference
@@ -86,82 +86,10 @@ case class AsOfPick(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-/** Strict-< sibling of [[AsOfPick]] for CDF lookups over a packed
-  * distribution: given parallel sorted arrays — `keys` (ascending
-  * doubles, distinct by construction: they come from a groupBy on the
-  * key) and `cums` (cumulative counts: cums[i] = #rows with key <=
-  * keys[i]) — return `cums` at the GREATEST `keys[i] < t` (STRICTLY
-  * below the probe), or NULL when every key is at-or-above `t`.
-  *
-  * This is the probe kernel that replaces a non-equi theta join
-  * `big JOIN dist ON dist.key < f(big)` + count-per-big-row with one
-  * O(log m) codegen'd binary search per probe row against the broadcast
-  * CDF: cums at the greatest key strictly below t IS the join's
-  * per-row match count, because the keys are distinct and cumulative.
-  * A NULL result corresponds to the inner join's dropped row (zero
-  * matches). The element compare is the primitive double `<` — the
-  * same IEEE comparison the join predicate evaluates per pair (the
-  * packed keys are normal doubles from the data; NaN keys must not be
-  * packed, same invariant as `asof_pick`'s non-null timestamps).
-  * Registered as `cdf_below`.
-  */
-case class CdfBelow(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "cdf_below"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(LongType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"cdf_below requires (array<double>, array<bigint>, double), got " +
-          s"(${first.dataType.catalogString}, ${second.dataType.catalogString}, " +
-          s"${third.dataType.catalogString})")
-    }
-
-  override protected def nullSafeEval(keysA: Any, cumsA: Any, t: Any): Any = {
-    val ks = keysA.asInstanceOf[ArrayData]
-    val cs = cumsA.asInstanceOf[ArrayData]
-    val probe = t.asInstanceOf[Double]
-    // lower bound: first index with keys[i] >= probe; match = index - 1
-    var lo = 0
-    var hi = ks.numElements()
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (ks.getDouble(mid) < probe) lo = mid + 1 else hi = mid
-    }
-    if (lo == 0) null else java.lang.Long.valueOf(cs.getLong(lo - 1))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (keysA, cumsA, t) => {
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid")
-      s"""
-         |int $lo = 0;
-         |int $hi = $keysA.numElements();
-         |while ($lo < $hi) {
-         |  int $mid = ($lo + $hi) >>> 1;
-         |  if ($keysA.getDouble($mid) < $t) $lo = $mid + 1; else $hi = $mid;
-         |}
-         |if ($lo == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $cumsA.getLong($lo - 1);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): CdfBelow =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object AsOfNeighborsUtil {
+/** Static kernels of the as-of probes, each named after its SQL function:
+  * `asof_neighbors` (called by [[AsOfNeighbors]]) and `cdf_below` (a
+  * [[Natives.table]] row). */
+object AsOfUtil {
   /** ONE binary search yields BOTH temporal neighbors: `lo` = the first
     * index with `ts[lo] > t` (upper bound), so `lo - 1` is the backward
     * as-of match (greatest ts <= t) and `lo` the forward one (least
@@ -169,7 +97,7 @@ object AsOfNeighborsUtil {
     * stay null without nulling the timestamp (the interpolation blend
     * needs the (t, v) pair from the SAME packed row — built that way by
     * the caller). */
-  def pick(ts: ArrayData, vs: ArrayData, probe: Long, elemType: DataType): InternalRow = {
+  def asof_neighbors(ts: ArrayData, vs: ArrayData, probe: Long, elemType: DataType): InternalRow = {
     var lo = 0
     var hi = ts.numElements()
     while (lo < hi) {
@@ -190,6 +118,35 @@ object AsOfNeighborsUtil {
       else row.update(3, vs.get(lo, elemType))
     }
     row
+  }
+
+  /** Strict-< sibling of [[AsOfPick]] for CDF lookups over a packed
+    * distribution: given parallel sorted arrays — `keys` (ascending
+    * doubles, distinct by construction: they come from a groupBy on the
+    * key) and `cums` (cumulative counts: cums[i] = #rows with key <=
+    * keys[i]) — return `cums` at the GREATEST `keys[i] < t` (STRICTLY
+    * below the probe), or NULL when every key is at-or-above `t`.
+    *
+    * This is the probe kernel that replaces a non-equi theta join
+    * `big JOIN dist ON dist.key < f(big)` + count-per-big-row with one
+    * O(log m) binary search per probe row against the broadcast
+    * CDF: cums at the greatest key strictly below t IS the join's
+    * per-row match count, because the keys are distinct and cumulative.
+    * A NULL result corresponds to the inner join's dropped row (zero
+    * matches). The element compare is the primitive double `<` — the
+    * same IEEE comparison the join predicate evaluates per pair (the
+    * packed keys are normal doubles from the data; NaN keys must not be
+    * packed, same invariant as `asof_pick`'s non-null timestamps).
+    * Registered as `cdf_below`. */
+  def cdf_below(keys: ArrayData, cums: ArrayData, t: Double): java.lang.Long = {
+    // lower bound: first index with keys[i] >= t; match = index - 1
+    var lo = 0
+    var hi = keys.numElements()
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (keys.getDouble(mid) < t) lo = mid + 1 else hi = mid
+    }
+    if (lo == 0) null else cums.getLong(lo - 1)
   }
 }
 
@@ -231,14 +188,14 @@ case class AsOfNeighbors(first: Expression, second: Expression, third: Expressio
     }
 
   override protected def nullSafeEval(tsA: Any, valA: Any, t: Any): Any =
-    AsOfNeighborsUtil.pick(tsA.asInstanceOf[ArrayData],
+    AsOfUtil.asof_neighbors(tsA.asInstanceOf[ArrayData],
       valA.asInstanceOf[ArrayData], t.asInstanceOf[Long], elemType)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val elemRef = ctx.addReferenceObj("elemType", elemType,
       "org.apache.spark.sql.types.DataType")
     nullSafeCodeGen(ctx, ev, (tsA, valA, t) =>
-      s"${ev.value} = graft.functions.AsOfNeighborsUtil.pick($tsA, $valA, $t, $elemRef);")
+      s"${ev.value} = graft.functions.AsOfUtil.asof_neighbors($tsA, $valA, $t, $elemRef);")
   }
 
   override protected def withNewChildrenInternal(

@@ -1,19 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** `letter_runs(text)` — the BPE pre-tokenizer's corpus-pass kernel
+  * ([[graft.llm.BpeTrainer]]): the last `regexp_extract_all` in the
+  * trainer's per-row path, replaced by one JIT'd byte scan (the
+  * [[TextStatsUtil]] discipline — at 100 TB the corpus pass is pure
+  * per-byte CPU, and regex per distinct token is the per-task work
+  * §1.2-step-2 says to remove once the plan shape is right). */
 object LetterRunsUtil {
   /** Maximal `[a-z]+` runs of the input, in order — bit-identical to
     * `regexp_extract_all(s, '[a-z]+', 0)` without compiling or running a
     * regex: in valid UTF-8 the bytes 0x61..0x7a ARE the codepoints a..z
     * (continuation bytes are >= 0x80, multi-byte leads >= 0xC0), so one
     * byte scan finds exactly the char runs the regex finds. */
-  def runs(s: UTF8String): ArrayData = {
+  def letter_runs(s: UTF8String): ArrayData = {
     val b = s.getBytes
     val n = b.length
     // count first: tiny second pass beats growing a builder per token
@@ -40,49 +42,20 @@ object LetterRunsUtil {
   }
 }
 
-/** See [[LetterRunsUtil.runs]]. Registered as `letter_runs` — the BPE
-  * pre-tokenizer's corpus-pass kernel ([[graft.llm.BpeTrainer]]): the
-  * last `regexp_extract_all` in the trainer's per-row path, replaced by
-  * one JIT'd byte scan (the [[TextStatsUtil]] discipline — at 100 TB
-  * the corpus pass is pure per-byte CPU, and regex per distinct token is
-  * the per-task work §1.2-step-2 says to remove once the plan shape is
-  * right). */
-case class LetterRuns(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LetterRuns.schema
-  override def prettyName: String = "letter_runs"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"letter_runs requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    LetterRunsUtil.runs(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.LetterRunsUtil.runs($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): LetterRuns =
-    copy(child = newChild)
-}
-
-object LetterRuns {
-  val schema: DataType = ArrayType(StringType, containsNull = false)
-}
-
+/** `bracket_chars(text)` — the BPE initial character tokenization
+  * (`fast` -> `<f><a><s><t>`), the last regex in the
+  * q39/q109/q154/q155 paths (vocab build runs it per distinct word,
+  * encode per doc-local distinct term). */
 object BracketCharsUtil {
   /** `<c>` wrapping of every character — bit-identical to
     * `regexp_replace(s, '(.)', '<$1>')` on any input without line
     * terminators (Java's `.` skips those; both engine call sites feed
-    * `[a-z]+` runs from [[LetterRunsUtil.runs]], where the domains
+    * `[a-z]+` runs from [[LetterRunsUtil.letter_runs]], where the domains
     * coincide) — without running a regex or growing a StringBuffer:
     * one pass counts codepoints (UTF-8 lead bytes), one pass copies.
     * Multi-byte codepoints wrap as units, exactly like the regex
     * (Java `.` matches a full codepoint, surrogate pairs included). */
-  def bracket(s: UTF8String): UTF8String = {
+  def bracket_chars(s: UTF8String): UTF8String = {
     val b = s.getBytes
     val n = b.length
     var chars = 0
@@ -106,30 +79,4 @@ object BracketCharsUtil {
     }
     UTF8String.fromBytes(out)
   }
-}
-
-/** See [[BracketCharsUtil.bracket]]. Registered as `bracket_chars` —
-  * the BPE initial character tokenization (`fast` -> `<f><a><s><t>`),
-  * the last regex in the q39/q109/q154/q155 paths (vocab build runs it
-  * per distinct word, encode per doc-local distinct term). */
-case class BracketChars(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "bracket_chars"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bracket_chars requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    BracketCharsUtil.bracket(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BracketCharsUtil.bracket($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): BracketChars =
-    copy(child = newChild)
 }

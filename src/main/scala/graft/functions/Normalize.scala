@@ -1,10 +1,7 @@
 package graft.functions
 
 import java.text.Normalizer
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization + PII masking for the corpus scrub chain —
@@ -30,7 +27,7 @@ object NormalizeUtil {
     * in NormalizeSpec on adversarial strings). ASCII fast path: NFKC is
     * the identity on ASCII, so a doc with no byte ≥ 0x80 folds with one
     * in-place byte lowercase — no String materialization at all. */
-  def nfkcFold(s: UTF8String): UTF8String = {
+  def nfkc_fold(s: UTF8String): UTF8String = {
     val b = s.getBytes
     var i = 0
     var ascii = true
@@ -193,7 +190,7 @@ object NormalizeUtil {
     * matters: an email inside a URL is already masked, a digit run
     * inside an email never reaches the digit pass). Returns
     * (masked, n_url, n_email, n_num). */
-  def piiMask(s: UTF8String): GenericInternalRow = {
+  def pii_mask(s: UTF8String): GenericInternalRow = {
     val nUrl = new Array[Long](1)
     val nEmail = new Array[Long](1)
     val nNum = new Array[Long](1)
@@ -205,58 +202,4 @@ object NormalizeUtil {
     row.update(3, nNum(0))
     row
   }
-}
-
-/** See [[NormalizeUtil.nfkcFold]]. Registered as `nfkc_fold`. */
-case class NfkcFold(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfkc_fold"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"nfkc_fold requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    NormalizeUtil.nfkcFold(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeUtil.nfkcFold($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfkcFold =
-    copy(child = newChild)
-}
-
-/** See [[NormalizeUtil.piiMask]]. Registered as `pii_mask`. */
-case class PiiMask(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = PiiMask.schema
-  override def prettyName: String = "pii_mask"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pii_mask requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    NormalizeUtil.piiMask(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeUtil.piiMask($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): PiiMask =
-    copy(child = newChild)
-}
-
-object PiiMask {
-  val schema: StructType = StructType(Seq(
-    StructField("masked", StringType, nullable = false),
-    StructField("n_url", LongType, nullable = false),
-    StructField("n_email", LongType, nullable = false),
-    StructField("n_num", LongType, nullable = false)))
 }

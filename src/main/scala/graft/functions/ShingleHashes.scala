@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All word n-gram shingle hashes of a document in ONE codegen'd byte
@@ -34,50 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * generation over document streams (shingle → signature → band), cf.
   * `/root/reference/examples/common.py` document shapes.
   */
-case class ShingleHashes(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = left.nullable
-  override def prettyName: String = "shingle_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) =>
-        if (!right.foldable)
-          TypeCheckResult.TypeCheckFailure(
-            "shingle_hashes n must be foldable (a literal)")
-        else {
-          val evaled = right.eval()
-          if (evaled == null)
-            TypeCheckResult.TypeCheckFailure(
-              "shingle_hashes n must be a non-null literal")
-          else if (evaled.asInstanceOf[Int] < 1)
-            TypeCheckResult.TypeCheckFailure(
-              s"shingle_hashes n must be >= 1, got $evaled")
-          else TypeCheckResult.TypeCheckSuccess
-        }
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"shingle_hashes requires (string, int), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
-
-  @transient private lazy val n: Int = right.eval().asInstanceOf[Int]
-
-  override protected def nullSafeEval(input: Any, ignored: Any): Any =
-    ShingleHashes.hashes(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gram = n // baked into the generated code once
-    nullSafeCodeGen(ctx, ev, (c, _) =>
-      s"${ev.value} = graft.functions.ShingleHashes.hashes($c, $gram);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ShingleHashes =
-    copy(left = newLeft, right = newRight)
-}
-
 object ShingleHashes {
 
   private[functions] val md5 = new ThreadLocal[java.security.MessageDigest] {
@@ -113,15 +66,12 @@ object ShingleHashes {
     starts
   }
 
-  /** Static entry point for both the interpreted and the generated
-    * path. NOT named `eval`: the case class inherits
-    * `eval(InternalRow)`, and scalac suppresses companion static
-    * forwarders for any name the class already has — the generated
-    * `ShingleHashes.eval(str, n)` call then fails Janino compilation
-    * and Spark silently drops the WHOLE stage to interpreted rows
-    * (observed as "Expr codegen error and falling back to interpreter
-    * mode"). A clash-free name gets a real static forwarder. */
-  def hashes(s: UTF8String, n: Int): GenericArrayData = {
+  /** `shingle_hashes(text, n)`. Called from generated code through the
+    * static forwarder scalac emits on the `ShingleHashes` class, which
+    * exists because this object has no companion class; a companion
+    * declaring a member of the same name (a case class's `eval`) would
+    * suppress it and drop every calling stage to interpreted rows. */
+  def shingle_hashes(s: UTF8String, n: Int): GenericArrayData = {
     val b = s.getBytes
     val starts = tokenStarts(b)
     val nTok = starts.length - 1
@@ -139,87 +89,34 @@ object ShingleHashes {
     }
     new GenericArrayData(out)
   }
-}
 
-/** Non-overlapping n-token segments of a document in ONE codegen'd byte
-  * scan: `space_segments(text, n)` = `array<struct<seg, h>>` where
-  * segment g is tokens `[g*n, min(g*n + n, nTok))` of the single-space
-  * split joined by ' ' (the last segment may be shorter) and `h` is its
-  * portable 60-bit hash — the same
-  * `('0x' || substr(md5(seg), 1, 15))::BIGINT % P` space every dedup
-  * chain signs in. A segment IS a byte slice of the original document
-  * (tokens cannot contain the separator), so the scan never builds
-  * intermediate token arrays, and joining the emitted segments back
-  * with ' ' reproduces the original bytes exactly — the reassembly
-  * contract segment-level dedup needs. Token semantics match
-  * `string_split(text, ' ')`: empty tokens kept, so empty text yields
-  * ONE empty segment, never zero. Reference semantics: segment/line
-  * dedup over document streams (RefinedWeb-style), cf.
-  * `/root/reference/examples/common.py` document shapes.
-  *
-  * The hash rides along so corpus-wide duplicate COUNTING can shuffle
-  * longs instead of segment text (the q103 plan); 60 bits is the
-  * engine's portable-oracle hash width — at ~10^10 segments the
-  * birthday bound predicts a handful of collisions, so a production
-  * deployment that cannot tolerate them swaps `h` to the full 128-bit
-  * digest without touching the dataflow. */
-case class SpaceSegments(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = SpaceSegments.schema
-  override def nullable: Boolean = left.nullable
-  override def prettyName: String = "space_segments"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) =>
-        if (!right.foldable)
-          TypeCheckResult.TypeCheckFailure(
-            "space_segments n must be foldable (a literal)")
-        else {
-          val evaled = right.eval()
-          if (evaled == null)
-            TypeCheckResult.TypeCheckFailure(
-              "space_segments n must be a non-null literal")
-          else if (evaled.asInstanceOf[Int] < 1)
-            TypeCheckResult.TypeCheckFailure(
-              s"space_segments n must be >= 1, got $evaled")
-          else TypeCheckResult.TypeCheckSuccess
-        }
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"space_segments requires (string, int), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
-
-  @transient private lazy val n: Int = right.eval().asInstanceOf[Int]
-
-  override protected def nullSafeEval(input: Any, ignored: Any): Any =
-    SpaceSegments.segments(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val block = n // baked into the generated code once
-    nullSafeCodeGen(ctx, ev, (c, _) =>
-      s"${ev.value} = graft.functions.SpaceSegments.segments($c, $block);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SpaceSegments =
-    copy(left = newLeft, right = newRight)
-}
-
-object SpaceSegments {
-  val schema: DataType = ArrayType(StructType(Seq(
-    StructField("seg", StringType, nullable = false),
-    StructField("h", LongType, nullable = false))), containsNull = false)
-
-  /** Static entry point — named clash-free for the same forwarder
-    * reason as [[ShingleHashes.hashes]]. */
-  def segments(s: UTF8String, n: Int): GenericArrayData = {
+  /** Non-overlapping n-token segments of a document in ONE codegen'd byte
+    * scan: `space_segments(text, n)` = `array<struct<seg, h>>` where
+    * segment g is tokens `[g*n, min(g*n + n, nTok))` of the single-space
+    * split joined by ' ' (the last segment may be shorter) and `h` is its
+    * portable 60-bit hash — the same
+    * `('0x' || substr(md5(seg), 1, 15))::BIGINT % P` space every dedup
+    * chain signs in. A segment IS a byte slice of the original document
+    * (tokens cannot contain the separator), so the scan never builds
+    * intermediate token arrays, and joining the emitted segments back
+    * with ' ' reproduces the original bytes exactly — the reassembly
+    * contract segment-level dedup needs. Token semantics match
+    * `string_split(text, ' ')`: empty tokens kept, so empty text yields
+    * ONE empty segment, never zero. Reference semantics: segment/line
+    * dedup over document streams (RefinedWeb-style).
+    *
+    * The hash rides along so corpus-wide duplicate COUNTING can shuffle
+    * longs instead of segment text (the q103 plan); 60 bits is the
+    * engine's portable-oracle hash width — at ~10^10 segments the
+    * birthday bound predicts a handful of collisions, so a production
+    * deployment that cannot tolerate them swaps `h` to the full 128-bit
+    * digest without touching the dataflow. */
+  def space_segments(s: UTF8String, n: Int): GenericArrayData = {
     val b = s.getBytes
-    val starts = ShingleHashes.tokenStarts(b)
+    val starts = tokenStarts(b)
     val nTok = starts.length - 1
     val nSeg = (nTok + n - 1) / n
-    val md = ShingleHashes.md5.get()
+    val md = md5.get()
     val out = new Array[Any](nSeg)
     var g = 0
     while (g < nSeg) {
@@ -229,7 +126,7 @@ object SpaceSegments {
       md.update(b, from, until - from)
       val row = new GenericInternalRow(2)
       row.update(0, UTF8String.fromBytes(b, from, until - from))
-      row.update(1, ShingleHashes.digest60(md.digest()) % PortableHash.P)
+      row.update(1, digest60(md.digest()) % PortableHash.P)
       out(g) = row
       g += 1
     }

@@ -1,12 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
+/** `strip_markup(text)` = `struct(s, n_tags)` — the web-corpus cleanup
+  * verb's kernel (q147): tag count + tag strip + entity decode were two
+  * regex passes and three replace passes per document; this is two
+  * JIT'd byte scans, same map-only plan. */
 object StripMarkupUtil {
   /** Tag strip + entity decode in two tight byte scans, bit-identical to
     * the composed form
@@ -34,7 +35,7 @@ object StripMarkupUtil {
     * neither create nor destroy a later stage's match. The &amp;-LAST
     * order's no-double-decode property ('&amp;lt;' -> '&lt;') falls out
     * of the same no-rescan rule. */
-  def strip(s: UTF8String): InternalRow = {
+  def strip_markup(s: UTF8String): InternalRow = {
     val b = s.getBytes
     val n = b.length
     val buf = new Array[Byte](n)
@@ -73,38 +74,4 @@ object StripMarkupUtil {
     row.update(1, tags)
     row
   }
-}
-
-/** See [[StripMarkupUtil.strip]]. Registered as `strip_markup` — the
-  * web-corpus cleanup verb's kernel (q147): tag count + tag strip +
-  * entity decode were two regex passes and three replace passes per
-  * document; this is two JIT'd byte scans, same map-only plan (the
-  * [[LshPlaneBits]]-style move the r10 not-yet list named). Returns
-  * `struct(s, n_tags)`. */
-case class StripMarkup(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StripMarkup.schema
-  override def prettyName: String = "strip_markup"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"strip_markup requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    StripMarkupUtil.strip(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.StripMarkupUtil.strip($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): StripMarkup =
-    copy(child = newChild)
-}
-
-object StripMarkup {
-  val schema: StructType = StructType(Seq(
-    StructField("s", StringType, nullable = false),
-    StructField("n_tags", LongType, nullable = false)))
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
@@ -131,7 +131,7 @@ object TextStatsUtil {
     * `max_token_len` is NULL when the document has no tokens (matching
     * `list_max([])`). Lowercasing delegates to [[UTF8String.toLowerCase]]
     * — the exact `lower()` the composed form applied. */
-  def subwordStats(s: UTF8String): InternalRow = {
+  def subword_stats(s: UTF8String): InternalRow = {
     val b = s.toLowerCase.getBytes
     val n = b.length
     val distinct = new SliceTable(64, counted = false)
@@ -178,7 +178,7 @@ object TextStatsUtil {
     * original byte slice from tok_i's start to tok_{i+1}'s end (tokens
     * cannot contain the separator), so bigram counting never
     * concatenates — it keys the slice. */
-  def spaceTokenStats(s: UTF8String, stops: Array[Array[Byte]]): InternalRow = {
+  def space_token_stats(s: UTF8String, stops: Array[Array[Byte]]): InternalRow = {
     val b = s.getBytes
     val n = b.length
     val distinct = new SliceTable(64, counted = false)
@@ -221,7 +221,7 @@ object TextStatsUtil {
     * bytes ((b & 0xC0) != 0x80). The regex `[^0-9]` strips everything
     * but ASCII digits, so the stripped length == count of bytes in
     * [0x30, 0x39] — which, again, only encode digit codepoints. */
-  def qualityCharStats(s: UTF8String): InternalRow = {
+  def quality_char_stats(s: UTF8String): InternalRow = {
     val b = s.getBytes
     val n = b.length
     var nTok = 1L; var nChars = 0L; var nDigits = 0L
@@ -251,7 +251,7 @@ object TextStatsUtil {
     * downstream shuffle (df aggregation, posting-list build). Element
     * order is hash-slot order — deterministic per document, meaningless,
     * and irrelevant to every consumer (explode feeds joins/aggregates). */
-  def spaceTokenCounts(s: UTF8String): ArrayData = {
+  def space_token_counts(s: UTF8String): ArrayData = {
     val b = s.getBytes
     val n = b.length
     val tokens = new SliceTable(64, counted = true)
@@ -288,7 +288,7 @@ object TextStatsUtil {
     * fewer than two tokens yields an empty array. Element order is
     * hash-slot order — deterministic per document, meaningless, and
     * irrelevant to every consumer (explode feeds joins/aggregates). */
-  def spaceBigramCounts(s: UTF8String): ArrayData = {
+  def space_bigram_counts(s: UTF8String): ArrayData = {
     val b = s.getBytes
     val n = b.length
     val bigrams = new SliceTable(64, counted = true)
@@ -315,10 +315,23 @@ object TextStatsUtil {
     new GenericArrayData(out)
   }
 
-  /** See [[RemoveTokenSpans]]. Spans must be sorted by start and
-    * disjoint (the `mergeSpans` output contract); token indices are
-    * the single-space split's, end exclusive. */
-  def removeTokenSpans(s: UTF8String, spans: ArrayData): UTF8String = {
+  /** `remove_token_spans(text, spans)`: splice token ranges out of a
+    * document in ONE byte scan — the "apply the cut list" half of
+    * substring dedup ([[graft.llm.SubstringDedup.applyCuts]]).
+    *
+    * `spans` is `array<struct<span_start, span_end>>`: token indices of
+    * the single-space split, end exclusive, sorted by start and disjoint
+    * (the `mergeSpans` output contract; `sort_array` over the collected
+    * struct list gives exactly that order, struct ordering being
+    * leading-field-first). Kept tokens are copied straight from the
+    * original bytes and rejoined with single spaces, so a document with
+    * no cuts round-trips byte-identically — including empty tokens from
+    * consecutive separators — and a fully-cut document yields the empty
+    * string. Work is O(doc bytes + spans); no token array, no per-token
+    * rows, no higher-order lambdas (a `filter` + `array_join`
+    * formulation is `CodegenFallback` and drops the whole stage to
+    * interpreted rows). */
+  def remove_token_spans(s: UTF8String, spans: ArrayData): UTF8String = {
     val b = s.getBytes
     val starts = ShingleHashes.tokenStarts(b)
     val nTok = starts.length - 1
@@ -401,69 +414,7 @@ object TextStatsUtil {
   }
 }
 
-/** See [[TextStatsUtil.subwordStats]]. Registered as `subword_stats`. */
-case class SubwordStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = SubwordStats.schema
-  override def prettyName: String = "subword_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"subword_stats requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextStatsUtil.subwordStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextStatsUtil.subwordStats($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SubwordStats =
-    copy(child = newChild)
-}
-
-object SubwordStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_subtokens", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("max_token_len", LongType, nullable = true),
-    StructField("n_numeric", LongType, nullable = false)))
-}
-
-/** See [[TextStatsUtil.qualityCharStats]]. Registered as
-  * `quality_char_stats`. */
-case class QualityCharStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = QualityCharStats.schema
-  override def prettyName: String = "quality_char_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quality_char_stats requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextStatsUtil.qualityCharStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextStatsUtil.qualityCharStats($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): QualityCharStats =
-    copy(child = newChild)
-}
-
-object QualityCharStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_tok", LongType, nullable = false),
-    StructField("n_chars", LongType, nullable = false),
-    StructField("n_digits", LongType, nullable = false)))
-}
-
-/** See [[TextStatsUtil.spaceTokenStats]]. Registered as
+/** See [[TextStatsUtil.space_token_stats]]. Registered as
   * `space_token_stats(text, stopwords)`; `stopwords` must be a foldable
   * `array<string>` literal (it is baked into the generated code once, not
   * re-evaluated per row). */
@@ -505,12 +456,12 @@ case class SpaceTokenStats(left: Expression, right: Expression)
   }
 
   override protected def nullSafeEval(input: Any, ignored: Any): Any =
-    TextStatsUtil.spaceTokenStats(input.asInstanceOf[UTF8String], stops)
+    TextStatsUtil.space_token_stats(input.asInstanceOf[UTF8String], stops)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val stopsRef = ctx.addReferenceObj("stops", stops, "byte[][]")
     nullSafeCodeGen(ctx, ev, (c, _) =>
-      s"${ev.value} = graft.functions.TextStatsUtil.spaceTokenStats($c, $stopsRef);")
+      s"${ev.value} = graft.functions.TextStatsUtil.space_token_stats($c, $stopsRef);")
   }
 
   override protected def withNewChildrenInternal(
@@ -524,64 +475,4 @@ object SpaceTokenStats {
     StructField("n_distinct", LongType, nullable = false),
     StructField("stop_hits", LongType, nullable = false),
     StructField("top_bg", LongType, nullable = true)))
-}
-
-/** See [[TextStatsUtil.spaceTokenCounts]]. Registered as
-  * `space_token_counts`. */
-case class SpaceTokenCounts(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = SpaceTokenCounts.schema
-  override def prettyName: String = "space_token_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"space_token_counts requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextStatsUtil.spaceTokenCounts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextStatsUtil.spaceTokenCounts($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SpaceTokenCounts =
-    copy(child = newChild)
-}
-
-object SpaceTokenCounts {
-  val schema: DataType = ArrayType(StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false))), containsNull = false)
-}
-
-/** See [[TextStatsUtil.spaceBigramCounts]]. Registered as
-  * `space_bigram_counts`. */
-case class SpaceBigramCounts(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = SpaceBigramCounts.schema
-  override def prettyName: String = "space_bigram_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"space_bigram_counts requires a string column, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextStatsUtil.spaceBigramCounts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextStatsUtil.spaceBigramCounts($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SpaceBigramCounts =
-    copy(child = newChild)
-}
-
-object SpaceBigramCounts {
-  val schema: DataType = ArrayType(StructType(Seq(
-    StructField("bg", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false))), containsNull = false)
 }

@@ -7,16 +7,18 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
-/** Native Catalyst expressions for the vector/similarity hot path.
+/** Static kernels for the vector/similarity hot path (the
+  * `quantized_dot`, `dot_long`, `quantized_dot_long` and `adc_lookup`
+  * rows of [[Natives.table]]).
   *
   * Spark's array higher-order functions (`zip_with`, `aggregate`) evaluate
   * their lambdas interpreted (CodegenFallback) — fine for the general
   * case, but the ANN inner loop (SURVEY §2.3 LLM extension) is exactly
   * the place the build brief's preference ladder says to drop to a
-  * codegen'd `Expression`: per-pair cost becomes one tight JIT'd long
-  * loop, no per-element boxing, no lambda dispatch.
+  * native kernel: per-pair cost becomes one tight JIT'd long loop, no
+  * per-element boxing, no lambda dispatch.
   *
   * Semantics — quantized dot product (must stay bit-identical to the
   * DuckDB oracle):   Σᵢ  trunc(xᵢ·1e7) · trunc(yᵢ·1e7)   over int64.
@@ -28,24 +30,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * Array elements must be non-null (embedding fixtures are); array
   * lengths may differ — the shorter prefix is used.
   */
-case class QuantizedDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+object VectorUtil {
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "quantized_dot"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"quantized_dot requires (array<float>, array<float>), got " +
-          s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** `quantized_dot(x, y)` = Σᵢ trunc(xᵢ·1e7) · trunc(yᵢ·1e7). */
+  def quantized_dot(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0L
     var i = 0
@@ -56,30 +44,70 @@ case class QuantizedDot(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += (long) (((double) $a.getFloat($i)) * 1.0E7)
-         |      * (long) (((double) $b.getFloat($i)) * 1.0E7);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+  /** `dot_long(x, y)` = Σᵢ xᵢ·yᵢ over two int64 arrays (shorter prefix) —
+    * the long-domain sibling of [[quantized_dot]]. Replaces the
+    * interpreted `aggregate(zip_with(a, b, _*_), 0, _+_)` pattern in the
+    * k-means assignment, SQ8 ADC and IVF-refine hot loops: the HOF form
+    * allocates an intermediate array and dispatches its lambda
+    * interpreted PER ROW; this is one tight JIT'd loop. Elements must be
+    * non-null (quantized vectors are by construction).
+    *
+    * DIVERGENCE from the replaced HOF on unequal lengths (r11, ADVICE
+    * r10): `zip_with` null-pads the shorter array, so the HOF chain
+    * returns NULL on a length mismatch; this returns the shorter-prefix
+    * dot product instead. Every engine call site feeds equal-length
+    * arrays by construction (embeddings and centroids share one
+    * dimension), where the two forms are bit-equal — the PropertySpec
+    * parity test pins exactly that min-prefix rule, not a general
+    * equivalence. A caller that cannot guarantee equal lengths must
+    * check them, not rely on a NULL. */
+  def dot_long(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L
+    var i = 0
+    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
+    s
+  }
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): QuantizedDot =
-    copy(left = newLeft, right = newRight)
+  /** `quantized_dot_long(x, y)` = Σᵢ trunc(xᵢ·1e7)·yᵢ — [[quantized_dot]]'s
+    * left side against an ALREADY-integer right side (centroid component
+    * arrays, IVF refine): one JIT'd loop instead of the interpreted
+    * `aggregate(zip_with(emb, c_arr, CAST(x·1e7 AS LONG) * c))` per row.
+    * Same [[VectorOps.QScale]] truncate-toward-zero contract. */
+  def quantized_dot_long(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L
+    var i = 0
+    while (i < n) {
+      s += (x.getFloat(i).toDouble * 1.0e7).toLong * y.getLong(i)
+      i += 1
+    }
+    s
+  }
+
+  /** `adc_lookup(tab, code)`: the d2 of the FIRST entry of `tab`
+    * (array<struct<cid int, d2 bigint>>) whose cid equals `code`; NULL if
+    * absent — bit-identical to the previous interpreted
+    * `element_at(filter(tab, x -> x.cid = code), 1).d2` per candidate row,
+    * without the filtered-array allocation and lambda dispatch. */
+  def adc_lookup(tab: ArrayData, code: Int): java.lang.Long = {
+    var i = 0
+    while (i < tab.numElements()) {
+      if (!tab.isNullAt(i)) {
+        val s = tab.getStruct(i, 2)
+        if (!s.isNullAt(0) && s.getInt(0) == code)
+          return if (s.isNullAt(1)) null else s.getLong(1)
+      }
+      i += 1
+    }
+    null
+  }
 }
 
 /** Random-hyperplane LSH bucketing in one codegen'd pass: bit j of the
   * result is set iff  Σᵢ trunc(xᵢ·1e7) · wⱼᵢ > 0  (int64-exact, same
-  * quantization contract as [[QuantizedDot]], bit-identical to the DuckDB
-  * oracle's plane join). Replaces the previous 8 interpreted
+  * quantization contract as [[VectorUtil.quantized_dot]], bit-identical
+  * to the DuckDB oracle's plane join). Replaces the previous 8 interpreted
   * `aggregate(zip_with(...))` passes per row — those allocate an
   * intermediate array per plane per row and dispatch the lambda
   * interpreted; this is one tight JIT'd nested loop over the row.
@@ -169,119 +197,6 @@ case class LshPlaneBits(left: Expression, right: Expression)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LshPlaneBits =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Σᵢ aᵢ·bᵢ over two int64 arrays (shorter prefix) — the long-domain
-  * sibling of [[QuantizedDot]] (r10, guide §"expressions and codegen").
-  * Replaces the interpreted `aggregate(zip_with(a, b, _*_), 0, _+_)`
-  * pattern in the k-means assignment, SQ8 ADC and IVF-refine hot loops:
-  * the HOF form allocates an intermediate array and dispatches its
-  * lambda interpreted PER ROW; this is one tight JIT'd loop. Elements
-  * must be non-null (quantized vectors are by construction).
-  *
-  * DIVERGENCE from the replaced HOF on unequal lengths (r11, ADVICE
-  * r10): `zip_with` null-pads the shorter array, so the HOF chain
-  * returns NULL on a length mismatch; this expression returns the
-  * shorter-prefix dot product instead. Every engine call site feeds
-  * equal-length arrays by construction (embeddings and centroids share
-  * one dimension), where the two forms are bit-equal — the
-  * PropertySpec parity test pins exactly that min-prefix rule, not a
-  * general equivalence. A caller that cannot guarantee equal lengths
-  * must check them, not rely on a NULL. */
-case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dot_long"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"dot_long requires (array<bigint>, array<bigint>), got " +
-          s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Σᵢ trunc(xᵢ·1e7)·bᵢ — [[QuantizedDot]]'s left side against an
-  * ALREADY-integer right side (centroid component arrays, IVF refine):
-  * one codegen'd loop instead of the interpreted
-  * `aggregate(zip_with(emb, c_arr, CAST(x·1e7 AS LONG) * c))` per row.
-  * Same [[VectorOps.QScale]] truncate-toward-zero contract. */
-case class QuantizedDotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "quantized_dot_long"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"quantized_dot_long requires (array<float>, array<bigint>), got " +
-          s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      s += (x.getFloat(i).toDouble * 1.0e7).toLong * y.getLong(i)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += (long) (((double) $a.getFloat($i)) * 1.0E7) * $b.getLong($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): QuantizedDotLong =
     copy(left = newLeft, right = newRight)
 }
 
@@ -396,71 +311,6 @@ case class PqCodes(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-/** ADC table lookup: the d2 of the FIRST entry of `tab`
-  * (array<struct<cid int, d2 bigint>>) whose cid equals `code`; NULL if
-  * absent — bit-identical to the previous interpreted
-  * `element_at(filter(tab, x -> x.cid = code), 1).d2` per candidate row,
-  * without the filtered-array allocation and lambda dispatch. */
-case class AdcLookup(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "adc_lookup"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(s: StructType, _), IntegerType)
-          if s.length == 2 && s(0).dataType == IntegerType &&
-            s(1).dataType == LongType =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"adc_lookup requires (array<struct<cid:int,d2:bigint>>, int), got " +
-          s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val tab = a.asInstanceOf[ArrayData]
-    val code = b.asInstanceOf[Int]
-    var i = 0
-    while (i < tab.numElements()) {
-      if (!tab.isNullAt(i)) {
-        val s = tab.getStruct(i, 2)
-        if (!s.isNullAt(0) && s.getInt(0) == code)
-          return if (s.isNullAt(1)) null else s.getLong(1)
-      }
-      i += 1
-    }
-    null
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (tab, code) => {
-      val i = ctx.freshName("i")
-      val st = ctx.freshName("st")
-      val found = ctx.freshName("found")
-      s"""
-         |boolean $found = false;
-         |${ev.isNull} = true;
-         |for (int $i = 0; !$found && $i < $tab.numElements(); $i++) {
-         |  if (!$tab.isNullAt($i)) {
-         |    org.apache.spark.sql.catalyst.InternalRow $st = $tab.getStruct($i, 2);
-         |    if (!$st.isNullAt(0) && $st.getInt(0) == $code) {
-         |      $found = true;
-         |      if (!$st.isNullAt(1)) {
-         |        ${ev.isNull} = false;
-         |        ${ev.value} = $st.getLong(1);
-         |      }
-         |    }
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): AdcLookup =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Column-API surface for the native expressions. The function is
   * registered by [[graft.GraftExtensions]] (`spark.sql.extensions`), so
   * the public `call_function` resolves it — no private Catalyst APIs on
@@ -470,7 +320,7 @@ object VectorOps {
   /** THE quantization contract: components scale by 1e7 and truncate
     * toward zero to int64 — the one rounding Java `(long)`, Spark
     * `CAST AS LONG` and DuckDB `trunc()::BIGINT` agree on. Every
-    * consumer (QuantizedDot, LlmQueries oracles, KMeans) must share
+    * consumer (VectorUtil, LlmQueries oracles, KMeans) must share
     * this constant or hash-gate parity silently breaks. */
   val QScale = 1.0e7
 

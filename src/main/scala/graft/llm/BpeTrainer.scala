@@ -14,7 +14,7 @@ import graft.queries._
   * symbol pair, re-tokenize, repeat. The distributed shape:
   *
   *  1. ONE corpus-sized pass builds the word-frequency table — and it
-  *     rides [[graft.functions.SpaceTokenCounts]], so the exchange
+  *     rides [[graft.functions.TextStatsUtil.space_token_counts]], so the exchange
   *     carries per-document DISTINCT (term, tf) pairs, never raw text
   *     (the §8.12 discipline). Everything after runs on the vocabulary,
   *     which is sublinear in corpus size (Heaps' law) and stays
@@ -59,7 +59,7 @@ object BpeTrainer {
     * bracket alphabet disjoint from symbols. Extracted per DISTINCT
     * space-token, so the doc-local (term, tf) dedup still pays for the
     * corpus pass. r11: the run extraction rides the native
-    * [[graft.functions.LetterRuns]] byte scan (bit-identical to
+    * [[graft.functions.LetterRunsUtil.letter_runs]] byte scan (bit-identical to
     * `regexp_extract_all(term, '[a-z]+', 0)`) — the corpus pass is now
     * regex-free end to end (space_token_counts + letter_runs, both
     * JIT'd scans). */

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * corpus-TOKEN shuffle (explode + groupBy(doc_id) to count what never
   * needed to leave its row). This operator composes the native byte-scan
   * expressions ([[graft.functions.SpaceTokenStats]],
-  * [[graft.functions.SubwordStats]]) plus codegen'd builtins
+  * [[graft.functions.TextStatsUtil.subword_stats]]) plus codegen'd builtins
   * (`translate` for digit counting — not a regex) into one map-only
   * projection: the corpus is read once and every downstream filter reads
   * the same slim profile table.

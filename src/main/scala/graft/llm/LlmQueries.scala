@@ -41,8 +41,8 @@ object LlmQueries {
     * fixed sequence of IEEE double ops. 1e-7 relative error is far below
     * any similarity threshold that matters.
     *
-    * Hot path: [[graft.functions.QuantizedDot]] — a native codegen'd
-    * Expression (one JIT'd long loop per pair, no HOF lambda dispatch). */
+    * Hot path: [[graft.functions.VectorUtil.quantized_dot]] — a native
+    * static kernel (one JIT'd long loop per pair, no HOF lambda dispatch). */
   private val QScale = 10000000L // 1e7
 
   /** Column-level truncation quantization (plane-dot HOF path). */
@@ -96,7 +96,7 @@ object LlmQueries {
   private val MhB: IndexedSeq[Long] = (0 until 16).map(j => (2654435789L * (j + 7) + 40503L * j) % P)
 
   /** 16-permutation MinHash signature as h0..h15 columns — SHUFFLE-FREE:
-    * one codegen'd byte scan per document ([[graft.functions.ShingleHashes]]
+    * one codegen'd byte scan per document ([[graft.functions.ShingleHashes.shingle_hashes]]
     * feeding [[graft.functions.MinhashMins]]), no token explode, no
     * groupBy. The aggregation form this replaced (explode shingles →
     * md5 per shingle string → 16 partial-min aggregates) shuffled a
@@ -202,7 +202,7 @@ object LlmQueries {
 
   /** The 16 per-row MinHash minima as ONE array expression over the TEXT
     * column: shingle hashing and all permutation minima in two chained
-    * codegen'd byte scans ([[graft.functions.ShingleHashes]] →
+    * codegen'd byte scans ([[graft.functions.ShingleHashes.shingle_hashes]] →
     * [[graft.functions.MinhashMins]]) — no `split`, no `transform`
     * lambdas (CodegenFallback), no per-shingle string concatenation.
     * NULL when the document has fewer than 3 tokens (no shingles — the
@@ -505,7 +505,7 @@ object LlmQueries {
     // pre-tokenizer shape. The oracle keeps the regex + list-lambda
     // formulation (char classes behave identically in RE2); the engine
     // side computes all four stats in ONE codegen'd byte scan
-    // ([[graft.functions.SubwordStats]]) — the composed form's
+    // ([[graft.functions.TextStatsUtil.subword_stats]]) — the composed form's
     // `transform`/`filter` lambdas are CodegenFallback (whole projection
     // drops to interpreted rows) and re-materialize the token array per
     // pass. Embarrassingly parallel, no shuffle before the final sort. ----
@@ -1159,7 +1159,7 @@ object LlmQueries {
     // is the production variant, excluded from the gate only because
     // libm transcendentals differ per engine (SURVEY §6 numeric
     // discipline). Shape: TF is computed doc-locally in one codegen'd
-    // byte scan ([[graft.functions.SpaceTokenCounts]] — the oracle keeps
+    // byte scan ([[graft.functions.TextStatsUtil.space_token_counts]] — the oracle keeps
     // the unnest + GROUP BY (doc, term) formulation), so the corpus-sized
     // (doc, term) exchange disappears: only the already-distinct
     // per-doc term rows shuffle — once to term for df, once back to doc
@@ -1295,7 +1295,7 @@ object LlmQueries {
     // them. Shape: overlap is counted in the portable 60-bit%P HASH
     // space — the same space the whole MinHash chain signs in — never on
     // shingle strings: each side's per-doc distinct hash set comes from
-    // ONE codegen'd byte scan ([[graft.functions.ShingleHashes]] +
+    // ONE codegen'd byte scan ([[graft.functions.ShingleHashes.shingle_hashes]] +
     // `array_distinct`, doc-local — no token shuffle, no per-shingle
     // string construction), the benchmark set is DISTINCT'd then
     // broadcast (eval suites are tiny next to a 100 TB corpus), so the
@@ -1937,7 +1937,7 @@ object LlmQueries {
     // 10-token blocks (production swaps the segmenter — split('\n') —
     // without touching the dataflow). The oracle keeps the
     // string-keyed window formulation; the engine side segments in one
-    // codegen'd byte scan ([[graft.functions.SpaceSegments]]) and makes
+    // codegen'd byte scan ([[graft.functions.ShingleHashes.space_segments]]) and makes
     // the dedup DECISION travel as longs: duplicate counting aggregates
     // 60-bit segment hashes (uniform keys, map-side partials), the
     // per-doc removal set comes back as (doc_id, idx) longs, and
@@ -2310,7 +2310,7 @@ object LlmQueries {
     // window over the tiny (term × segment) aggregate — no second scan
     // of the corpus; raw text never shuffles (only (term, doc_id)
     // pairs), and the per-doc DISTINCT happens doc-locally in the same
-    // byte scan that tokenizes ([[graft.functions.SpaceTokenCounts]]) —
+    // byte scan that tokenizes ([[graft.functions.TextStatsUtil.space_token_counts]]) —
     // the exploded-occurrence global `.distinct()` exchange this
     // replaces shuffled every token occurrence of the corpus.
     // df ≥ 25 keeps the gated output to index-worthy terms.
@@ -3679,7 +3679,7 @@ object LlmQueries {
     // this answers "which EXACT passages repeat anywhere?" — the
     // boilerplate/license/quote remover that doc-level dedup cannot
     // express. Shape: window hashing is ONE codegen'd byte scan per doc
-    // ([[graft.functions.ShingleHashes]] — a window IS a byte slice, the
+    // ([[graft.functions.ShingleHashes.shingle_hashes]] — a window IS a byte slice, the
     // md5 runs in place); the (pos, hash) table is materialized once
     // through the seam (it feeds both the global dup-hash aggregation
     // and the join back — the suffix-array analogue: Lee et al. write
@@ -3710,8 +3710,8 @@ object LlmQueries {
     // 1e9 // count because libm transcendentals differ per engine
     // (SURVEY §6 numeric discipline) while floor division is exact in
     // both. Shape: per-doc term AND bigram frequency tables are each ONE
-    // codegen'd byte scan ([[graft.functions.SpaceTokenCounts]] /
-    // [[graft.functions.SpaceBigramCounts]] — a bigram IS a byte slice),
+    // codegen'd byte scan ([[graft.functions.TextStatsUtil.space_token_counts]] /
+    // [[graft.functions.TextStatsUtil.space_bigram_counts]] — a bigram IS a byte slice),
     // so only already-distinct (doc, gram) rows ever shuffle — once to
     // the gram for the LM build, once back to the doc for scoring; the
     // corpus LM is a shuffle join, not a broadcast (at 100 TB the bigram
@@ -3877,7 +3877,7 @@ object LlmQueries {
     // round-trip byte-identically (empty tokens included). Shape: spans
     // aggregate at DOC grain (duplication-sized, few per doc), join
     // back on doc_id, and the splice is ONE codegen'd byte scan per
-    // document ([[graft.functions.RemoveTokenSpans]] — kept tokens copy
+    // document ([[graft.functions.TextStatsUtil.remove_token_spans]] — kept tokens copy
     // straight from the original bytes; the filter + array_join
     // formulation the oracle runs is a CodegenFallback HOF and would
     // re-materialize a token array per row). The corpus shuffles ONCE

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   *  - [[windowHashes]]: every n-token window's portable 60-bit hash
   *    with its token position — ONE codegen'd byte scan per document
-  *    ([[graft.functions.ShingleHashes]]; a window IS a byte slice of
+  *    ([[graft.functions.ShingleHashes.shingle_hashes]]; a window IS a byte slice of
   *    the original text), exploded to (doc_id, pos, h). Linear in
   *    corpus tokens, map-only.
   *  - [[mergeSpans]]: duplicated positions → MAXIMAL per-doc spans.
@@ -112,7 +112,7 @@ object SubstringDedup {
   /** Produce the CLEANED corpus (q161): splice every span out of its
     * document and reassemble the survivors — (doc_id, clean_text,
     * kept_tokens). The splice is one codegen'd byte scan per document
-    * ([[graft.functions.RemoveTokenSpans]]): the sorted span list rides
+    * ([[graft.functions.TextStatsUtil.remove_token_spans]]): the sorted span list rides
     * a doc-grain aggregation (spans per doc are few — duplication-
     * sized, never corpus-sized), joins back on doc_id, and tokens are
     * copied straight from the original bytes — no token arrays, no

@@ -128,19 +128,17 @@ object Prefix {
 
   /** df tagged with its slice id (+ the slice count), from boundaries
     * computed once — deterministic, shared by construction. The tag is
-    * the codegen'd binary-search [[graft.functions.SliceId]] (O(log
-    * #slices) per row — the comparison-chain fallback, O(#slices), is
-    * kept only for sessions without [[graft.GraftExtensions]]). Null
-    * keys land in slice 0 under both forms. */
+    * the codegen'd binary-search [[graft.functions.SliceId]], O(log
+    * #slices) per row, registered by [[graft.GraftExtensions]]: a session
+    * without the extension fails at analysis naming `slice_id`. Null
+    * keys land in slice 0. */
   private def sliced(df: DataFrame, ts: String): (DataFrame, Int) = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val key = sliceKey(df, ts)
     val bounds = sampleBounds(df, key, n)
     val slice =
       if (bounds.isEmpty) lit(0)
-      else if (df.sparkSession.catalog.functionExists("slice_id"))
-        coalesce(call_function("slice_id", key, typedlit(bounds.toSeq)), lit(0))
-      else bounds.map(b => when(key > b, 1).otherwise(0)).reduce(_ + _)
+      else coalesce(call_function("slice_id", key, typedlit(bounds.toSeq)), lit(0))
     (df.withColumn(PID, slice), bounds.length + 1)
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.NormalizeUtil
 
-/** [[graft.functions.NfkcFold]] / [[graft.functions.PiiMask]] properties
+/** [[NormalizeUtil.nfkc_fold]] / [[NormalizeUtil.pii_mask]] properties
   * beyond the q166/q167 gates:
   *
   *  - the PII byte-scan masker is equivalence-tested against the JDK
@@ -45,7 +45,7 @@ class NormalizeSpec extends AnyFunSuite {
   }
 
   private def piiGot(s: String): (String, Long, Long, Long) = {
-    val r = NormalizeUtil.piiMask(UTF8String.fromString(s))
+    val r = NormalizeUtil.pii_mask(UTF8String.fromString(s))
     (r.getUTF8String(0).toString, r.getLong(1), r.getLong(2), r.getLong(3))
   }
 
@@ -88,9 +88,9 @@ class NormalizeSpec extends AnyFunSuite {
       "ẞ and ß", "İstanbul", "ϓ", "²³ and 23", " nbsp",
       "combining ȩ́ marks", "日本語 ＡＢＣ")
     cases.foreach { c =>
-      val got = NormalizeUtil.nfkcFold(UTF8String.fromString(c)).toString
+      val got = NormalizeUtil.nfkc_fold(UTF8String.fromString(c)).toString
       assert(got == foldRef(c), s"input: $c")
-      val twice = NormalizeUtil.nfkcFold(UTF8String.fromString(got)).toString
+      val twice = NormalizeUtil.nfkc_fold(UTF8String.fromString(got)).toString
       assert(twice == got, s"not idempotent on: $c -> $got -> $twice")
     }
   }

@@ -166,36 +166,68 @@ class PropertySpec extends AnyFunSuite {
     // happened with a wrong package name in pq_codes' generated cast —
     // 76 fallback warns in the bench gate, zero test failures).
     // GenerateUnsafeProjection.generate bypasses the wrapper and THROWS.
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    // The expression list comes from the registry, so no native is left
+    // out: each table row as the StaticInvoke it is replaced by, each
+    // bespoke native as built.
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, RuntimeReplaceable}
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.sql.types._
+    import graft.functions.Natives
     val longArr = ArrayType(LongType, containsNull = false)
     val floatArr = ArrayType(FloatType, containsNull = false)
     val tabType = ArrayType(StructType(Seq(
       StructField("cid", IntegerType, nullable = false),
       StructField("d2", LongType, nullable = false))), containsNull = false)
+    val spanType = ArrayType(StructType(Seq(
+      StructField("span_start", LongType, nullable = false),
+      StructField("span_end", LongType, nullable = false))), containsNull = false)
+    val longs = BoundReference(0, longArr, nullable = true)
+    val floats = BoundReference(1, floatArr, nullable = true)
+    val tab = BoundReference(2, tabType, nullable = true)
+    val text = BoundReference(3, StringType, nullable = true)
+    val spans = BoundReference(4, spanType, nullable = true)
+    val x = BoundReference(5, DoubleType, nullable = true)
     val cwLit = Literal.create(
       Seq.tabulate(8)(c => Seq.tabulate(8)(j => (c * 8 + j).toLong)), ArrayType(longArr))
-    val exprs = Seq(
-      graft.functions.DotLong(BoundReference(0, longArr, nullable = true),
-        BoundReference(0, longArr, nullable = true)),
-      graft.functions.QuantizedDotLong(BoundReference(1, floatArr, nullable = true),
-        BoundReference(0, longArr, nullable = true)),
-      graft.functions.PqCodes(BoundReference(0, longArr, nullable = true),
-        cwLit, Literal(4)),
-      graft.functions.AdcLookup(BoundReference(2, tabType, nullable = true),
-        Literal(3)),
-      // r11 natives ride the same guard
-      graft.functions.AsOfNeighbors(BoundReference(0, longArr, nullable = true),
-        BoundReference(0, longArr, nullable = true), Literal(3L)),
-      graft.functions.LetterRuns(BoundReference(3, StringType, nullable = true)),
-      graft.functions.StripMarkup(BoundReference(3, StringType, nullable = true)),
-      graft.functions.BracketChars(BoundReference(3, StringType, nullable = true)),
-      graft.functions.QualityCharStats(BoundReference(3, StringType, nullable = true)),
-      graft.functions.CdfBelow(
+    val args: Map[String, Seq[Expression]] = Map(
+      "quantized_dot" -> Seq(floats, floats),
+      "dot_long" -> Seq(longs, longs),
+      "quantized_dot_long" -> Seq(floats, longs),
+      "adc_lookup" -> Seq(tab, Literal(3)),
+      "cdf_below" -> Seq(
         Literal.create(Seq(1.0, 2.5, 4.0), ArrayType(DoubleType, containsNull = false)),
-        Literal.create(Seq(2L, 5L, 9L), longArr), Literal(2.5)))
+        Literal.create(Seq(2L, 5L, 9L), longArr), Literal(2.5)),
+      "letter_runs" -> Seq(text),
+      "bracket_chars" -> Seq(text),
+      "strip_markup" -> Seq(text),
+      "subword_stats" -> Seq(text),
+      "quality_char_stats" -> Seq(text),
+      "space_token_counts" -> Seq(text),
+      "space_bigram_counts" -> Seq(text),
+      "remove_token_spans" -> Seq(text, spans),
+      "nfkc_fold" -> Seq(text),
+      "pii_mask" -> Seq(text),
+      "shingle_hashes" -> Seq(text, Literal(2)),
+      "space_segments" -> Seq(text, Literal(2)),
+      "pq_codes" -> Seq(longs, cwLit, Literal(4)),
+      "asof_pick" -> Seq(longs, longs, Literal(3L)),
+      "asof_neighbors" -> Seq(longs, longs, Literal(3L)),
+      "slice_id" -> Seq(x,
+        Literal.create(Seq(1.0, 2.0), ArrayType(DoubleType, containsNull = false))),
+      "lsh_plane_bits" -> Seq(floats, Literal.create(Seq(Seq(1L, -1L)), ArrayType(longArr))),
+      "minhash_mins" -> Seq(longs,
+        Literal.create(Seq(Seq(3L, 5L), Seq(7L, 11L)), ArrayType(longArr))),
+      "space_token_stats" -> Seq(text,
+        Literal.create(Seq("b"), ArrayType(StringType, containsNull = false))),
+      "zorder_key" -> Seq(Literal(5L), Literal(9L)))
+    assert(args.keySet == Natives.builders.map(_.name).toSet)
+    val names = Natives.builders.map(_.name)
+    val exprs = Natives.builders.map(b => b(args(b.name)) match {
+      case r: RuntimeReplaceable => r.replacement
+      case e => e
+    })
     // throws CompileException (not a silent fallback) if any genCode is broken
     val proj = GenerateUnsafeProjection.generate(
       exprs.map(e => org.apache.spark.sql.catalyst.expressions.Alias(e, "x")()))
@@ -205,20 +237,31 @@ class PropertySpec extends AnyFunSuite {
       new GenericArrayData(Array.tabulate(8)(_.toFloat)),
       new GenericArrayData(Array.tabulate(8)(i =>
         org.apache.spark.sql.catalyst.InternalRow(i, (i * 100).toLong))),
-      org.apache.spark.unsafe.types.UTF8String.fromString("a<x>b &amp;c"))
+      org.apache.spark.unsafe.types.UTF8String.fromString("a<x>b &amp;c"),
+      new GenericArrayData(Array(org.apache.spark.sql.catalyst.InternalRow(0L, 1L))),
+      2.5)
     val out = proj(row)
-    assert(out.getLong(0) == (0 until 8).map(i => i.toLong * i).sum)
-    assert(out.getLong(3) == 300L) // adc_lookup(cid=3) -> 300
-    val nb = out.getStruct(4, 4) // timeline 0..7, probe 3 -> (3, 3, 4, 4)
+    def at(name: String): Int = names.indexOf(name)
+    assert(out.getLong(at("dot_long")) == (0 until 8).map(i => i.toLong * i).sum)
+    assert(out.getLong(at("adc_lookup")) == 300L) // adc_lookup(cid=3) -> 300
+    val nb = out.getStruct(at("asof_neighbors"), 4) // timeline 0..7, probe 3 -> (3, 3, 4, 4)
     assert(nb.getLong(0) == 3L && nb.getLong(2) == 4L)
-    assert(out.getArray(5).numElements() == 5) // a, x, b, amp, c
-    val sm = out.getStruct(6, 2)
+    assert(out.getArray(at("letter_runs")).numElements() == 5) // a, x, b, amp, c
+    val sm = out.getStruct(at("strip_markup"), 2)
     assert(sm.getUTF8String(0).toString == "ab &c" && sm.getLong(1) == 1L)
-    assert(out.getUTF8String(7).toString ==
+    assert(out.getUTF8String(at("bracket_chars")).toString ==
       "<a><<><x><>><b>< ><&><a><m><p><;><c>")
-    val qc = out.getStruct(8, 3) // "a<x>b &amp;c": 2 tokens, 12 chars, 0 digits
+    // "a<x>b &amp;c": 2 tokens, 12 chars, 0 digits
+    val qc = out.getStruct(at("quality_char_stats"), 3)
     assert(qc.getLong(0) == 2L && qc.getLong(1) == 12L && qc.getLong(2) == 0L)
-    assert(out.getLong(9) == 2L) // cdf_below: strict < at exact-hit 2.5 -> cum of 1.0
+    // cdf_below: strict < at exact-hit 2.5 -> cum of 1.0
+    assert(out.getLong(at("cdf_below")) == 2L)
+    // interpreted eval == compiled output, native by native
+    exprs.zip(names).zipWithIndex.foreach { case ((e, name), i) =>
+      def scala(v: Any) = CatalystTypeConverters.convertToScala(v, e.dataType)
+      val compiled = if (out.isNullAt(i)) null else scala(out.get(i, e.dataType))
+      assert(scala(e.eval(row)) == compiled, name)
+    }
   }
 
   test("cdf_below == brute-force count-below over the raw population " +
