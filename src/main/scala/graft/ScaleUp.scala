@@ -53,7 +53,7 @@ object ScaleUp {
       System.err.println(s"[scaleup] wrote $name")
     }
 
-    val t = (n: String) => spark.read.parquet(s"$src/$n.parquet")
+    val t = (n: String) => graft.core.Tables.table(spark, src, n)
 
     locally {
       assertBelowStride(t("customer"), "customer", "c_custkey", 10000000L)

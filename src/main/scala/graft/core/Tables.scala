@@ -1,9 +1,12 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish star schema + event/LLM
-  * fixtures (see /root/repo/TESTDATA.md). All readers are plain parquet
+  * fixtures (see TESTDATA.md). All readers are plain parquet
   * scans so Catalyst predicate pushdown / column pruning apply end-to-end:
   * a downstream `.select(...).filter(...)` reaches the parquet footer as
   * `PushedFilters` + a pruned `ReadSchema`.
@@ -13,8 +16,61 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a partitioned layout unchanged — partition pruning is then free.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** One table as `spark.read.schema(s).parquet(path)`, where `s` is the
+    * table's inferred schema, remembered per session.
+    *
+    * Only the schema is cached: inferring it runs a footer-reading Spark
+    * job, a load with a known schema runs none. The file listing is
+    * never cached — every call lists the path again, so added, removed
+    * or rewritten files are always read — and neither is any DataFrame
+    * or plan: each call is a new relation with fresh attribute ids, so a
+    * query may load one table twice and self-join it.
+    *
+    * Key: the session (held weakly: a dropped session frees its
+    * entries), the qualified path, that path's modification time and
+    * length, and the session's explicitly set `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` values (`nanosAsLong` alone decides
+    * whether a TIMESTAMP(NANOS) `events.ts` infers as a long).
+    * Validation: the path's status is read on every call; a changed
+    * time, length or conf is a miss, and a miss infers the schema
+    * exactly as `spark.read.parquet(path)` does. A directory
+    * is validated by its own modification time, which changes when a
+    * file is added or removed but not when one inside is rewritten in
+    * place; object stores have no directory modification time at all,
+    * so a table there whose schema changes needs a new session. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private case class SchemaKey(path: String, modified: Long, length: Long,
+    parquetConf: Map[String, String])
+
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, StructType]]()
+
+  // Inference runs outside any lock (concurrent first loads each infer;
+  // the first to finish wins), so no Spark job ever waits on another.
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status = fs.getFileStatus(p)
+    val key = SchemaKey(fs.makeQualified(p).toString,
+      status.getModificationTime, status.getLen,
+      spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      })
+    val cache = schemas.synchronized {
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[SchemaKey, StructType]())
+    }
+    val hit = cache.get(key)
+    if (hit != null) hit
+    else {
+      val inferred = spark.read.parquet(path).schema
+      val raced = cache.putIfAbsent(key, inferred)
+      if (raced == null) inferred else raced
+    }
+  }
 
   /** `events.ts` arrives in whatever physical type the fixture
     * generator used — the loader normalizes every variant to
