@@ -1,9 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Input row for the replay-throughput microbench (events fixture). */
 private[graft] case class BenchReplayEvent(
     user_id: Long, ts_us: Long, event_id: Long, value: Double)
+
+private[graft] object BenchReplayEvent {
+  /** The counting replay: the events fixture, and every event delivered
+    * to a trivial stateful per-key callback (running count, emit each
+    * event) through the FULL distributed replay path — hash shuffle on
+    * the key, secondary sort (key, ts, tie), machine loop per key group.
+    * One output row per input row. */
+  def countingReplay(spark: SparkSession, sfDir: String)
+      : (Dataset[BenchReplayEvent], Dataset[Long]) = {
+    import spark.implicits._
+    val ev = graft.core.Tables.events(spark, sfDir)
+      .selectExpr("user_id", "unix_micros(ts) as ts_us", "event_id", "value")
+      .as[BenchReplayEvent]
+    val out = graft.streaming.Replay.run(ev, "user_id", "ts_us", "event_id")(
+        _.user_id, _.ts_us) { _ =>
+        new graft.streaming.KeyedStateMachine[Long, BenchReplayEvent, Long] {
+          private var seen = 0L
+          def onEvent(ts: Long, e: BenchReplayEvent,
+                      ctx: graft.streaming.ReplayCtx[Long]): Unit = {
+            seen += 1; ctx.emit(seen)
+          }
+        }
+      }
+    (ev, out)
+  }
+}
 
 /** Driver-run benchmark: every SparkEntry query executed end-to-end
   * against SPARK_GRAFT_SF_DIR, full materialization through the `noop`
@@ -110,8 +136,9 @@ object Bench {
       .mkString("{", ",", "}")
     val failed = results.filterNot(_._3).map(_._1)
     val total = results.filter(_._3).map(_._2).sum
-    // isolated re-measure of the slowest queries at Variance-probe
-    // discipline (VERDICT r7 #8: min-of-2 let a ~50% cross-session
+    // isolated re-measure of the three slowest queries — of the named
+    // ones under `Bench <q…>`, the repo's run-to-run variance protocol
+    // (VERDICT r7 #8: min-of-2 let a ~50% cross-session
     // spread set q115's isolated number): reps=5, GC'd between runs,
     // reported as {min, median} — min is steady-state plan cost,
     // median−min is the session-noise band, so a reviewer can separate
@@ -143,29 +170,14 @@ object Bench {
     }.mkString("{", ",", "}")
     // Replay-engine throughput vs the reference's headline number
     // (BASELINE.md: ~17k events/s — single-threaded replay with a trivial
-    // callback). Same workload shape here: every event delivered to a
-    // trivial stateful per-key callback (running count, emit each event),
-    // but through the FULL distributed replay path — hash shuffle on the
-    // key, secondary sort (key, ts, tie), machine loop per key group.
-    // min of 2 passes; events/s = rows / wall.
+    // callback). Same workload shape here, the counting replay
+    // (BenchReplayEvent.countingReplay); events/s = rows / wall.
     val replayPerSec = {
-      import spark.implicits._
-      val ev = graft.core.Tables.events(spark, sfDir)
-        .selectExpr("user_id", "unix_micros(ts) as ts_us", "event_id", "value")
-        .as[BenchReplayEvent]
+      val (ev, replayed) = BenchReplayEvent.countingReplay(spark, sfDir)
       val n = ev.count()
       def onePass(): Double = {
         val t0 = System.nanoTime()
-        graft.streaming.Replay.run(ev, "user_id", "ts_us", "event_id")(
-            _.user_id, _.ts_us) { _ =>
-            new graft.streaming.KeyedStateMachine[Long, BenchReplayEvent, Long] {
-              private var seen = 0L
-              def onEvent(ts: Long, e: BenchReplayEvent,
-                          ctx: graft.streaming.ReplayCtx[Long]): Unit = {
-                seen += 1; ctx.emit(seen)
-              }
-            }
-          }.write.format("noop").mode("overwrite").save()
+        replayed.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
       // min of FOUR passes: at sf0.1 one pass is ~0.2-0.5 s, so two

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** The local-cluster standing gate: everything else in the repo runs
   * `local[n]` — ONE JVM, shared heap — which cannot exercise the axis a
@@ -23,10 +22,12 @@ import org.apache.spark.sql.functions._
   *
   * The correctness half of the cluster gate is `Verify` itself run with
   * `SPARK_GRAFT_MASTER=local-cluster[...]` + the DuckDB compare (all
-  * 147 queries across process boundaries); this main covers the paths
-  * Verify can't: fault injection, and the live streaming engine
-  * (GraftFeed DSv2 → transformWithState/RocksDB) whose batch parity is
-  * asserted in [[StreamBench.run]].
+  * 169 queries across process boundaries); this main covers the paths
+  * Verify can't: fault injection, the counting replay
+  * ([[BenchReplayEvent.countingReplay]]), and the live streaming engine
+  * (GraftFeed DSv2 → transformWithState/RocksDB) — [[StreamBench.run]],
+  * then an executor killed mid-drain inside the repo's one
+  * live-vs-replay parity drain ([[StreamBench.asOfDrain]]).
   *
   *   SPARK_GRAFT_CLUSTER_OUT=CLUSTER_r07.json \
   *     sbt "runMain graft.ClusterCheck /root/testdata/sf0.01"
@@ -136,22 +137,9 @@ object ClusterCheck {
     // per-key stateful machines (closure + machine object serialized to
     // executors), output row count must equal input row count
     val replayOk = try {
-      import spark.implicits._
-      val ev = graft.core.Tables.events(spark, sfDir)
-        .selectExpr("user_id", "unix_micros(ts) as ts_us", "event_id", "value")
-        .as[BenchReplayEvent]
+      val (ev, replayed) = BenchReplayEvent.countingReplay(spark, sfDir)
       val n = ev.count()
-      val out = streaming.Replay.run(ev, "user_id", "ts_us", "event_id")(
-          _.user_id, _.ts_us) { _ =>
-          new streaming.KeyedStateMachine[Long, BenchReplayEvent, Long] {
-            private var seen = 0L
-            def onEvent(ts: Long, e: BenchReplayEvent,
-                        ctx: streaming.ReplayCtx[Long]): Unit = {
-              seen += 1; ctx.emit(seen)
-            }
-          }
-        }.count()
-      out == n && n > 0
+      replayed.count() == n && n > 0
     } catch { case e: Throwable =>
       System.err.println(s"[cluster] replay failed: $e"); false }
 
@@ -175,82 +163,23 @@ object ClusterCheck {
     // micro-batches; the kill lands a few batches in.
     val streamKillParity = try {
       import spark.implicits._
-      val feeds = (0 until 8).map(i => s"ck-stream-$i")
-      feeds.foreach(graft.sources.GraftFeed.clear)
       val total = 400000L
-      var i = 0L
-      while (i < total) {
-        val t = StreamSoak.tickOf(i)
-        graft.sources.GraftFeed.push(feeds((t.user_id % 8).toInt), t.ts_us,
-          s"${t.user_id},${t.seq},${t.kind},${t.value}")
-        i += 1
-      }
-      val touched = Seq(
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "spark.sql.shuffle.partitions")
-      val saved = touched.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val outN = new java.util.concurrent.atomic.AtomicLong(0L)
-        val outH = new java.util.concurrent.atomic.AtomicLong(0L)
-        val src = spark.readStream.format("graft-feed")
-          .option("shards", feeds.mkString(","))
-          .option("maxPerTrigger", "25000")
-          .load()
-          .withWatermark("ts", "1 hour")
-        val parsed = src
-          .select(split($"value", ",").as("f"), unix_micros($"ts").as("ts_us"))
-          .select($"f"(0).cast("long").as("user_id"), $"ts_us",
-            $"f"(1).cast("long").as("seq"), $"f"(2).as("kind"),
-            $"f"(3).cast("double").as("value"))
-          .as[streaming.Machines.MarketTick]
-        val out = streaming.AspStream.run(parsed)(_.user_id, _.ts_us, _.seq)(
-          uid => new streaming.Machines.AsOfMachine(uid))
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-ck-stream").toString
-        val q = out.writeStream
-          .foreachBatch {
-            (ds: org.apache.spark.sql.Dataset[streaming.Machines.AsOfRow], _: Long) =>
-              val (bn, bh) = StreamBench.fingerprint(ds.toDF())
-              outN.addAndGet(bn); outH.addAndGet(bh); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        Thread.sleep(3000) // a few micro-batches in...
-        // the check's whole point is the loss landing MID-drain: if the
-        // backlog drained before the kill, this run proved nothing —
-        // fail loudly instead of silently passing a no-fault parity
-        require(q.isActive,
-          "stream drained before the kill — enlarge the fixture or kill earlier")
-        killExecutor(sc, executorIds(sc).head) // ...lose a state-holding executor
-        require(q.awaitTermination(300000L), "stream did not drain after the kill")
-        val expected = StreamBench.fingerprint(
-          streaming.Replay.run(
-              spark.range(0L, total).map(i => StreamSoak.tickOf(i)),
-              "user_id", "ts_us", "seq")(_.user_id, _.ts_us)(
-              uid => new streaming.Machines.AsOfMachine(uid))
-            .toDF())
-        val p = (outN.get(), outH.get()) == expected
-        if (!p) System.err.println(s"[cluster] stream-kill parity FAILED: " +
-          s"(${outN.get()}, ${outH.get()}) vs $expected")
-        else System.err.println("[cluster] stream-kill parity OK " +
-          s"(${outN.get()} rows drained across the executor loss)")
-        feeds.foreach(graft.sources.GraftFeed.clear)
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        def rmr(f: java.io.File): Unit = {
-          val k = f.listFiles(); if (k != null) k.foreach(rmr); f.delete(); ()
-        }
-        rmr(new java.io.File(ckpt))
-        p
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      val d = StreamBench.asOfDrain(spark, "cluster-kill",
+        (0L until total).iterator.map(StreamBench.tickOf),
+        spark.range(0L, total).map(i => StreamBench.tickOf(i)),
+        maxPerTrigger = 25000L,
+        whileActive = { q =>
+          Thread.sleep(3000) // a few micro-batches in...
+          // the check's whole point is the loss landing MID-drain: if the
+          // backlog drained before the kill, this run proved nothing —
+          // fail loudly instead of silently passing a no-fault parity
+          require(q.isActive,
+            "stream drained before the kill — enlarge the fixture or kill earlier")
+          killExecutor(sc, executorIds(sc).head) // ...lose a state-holding executor
+        })
+      if (d.parity) System.err.println("[cluster] stream-kill parity OK " +
+        s"(${d.stream._1} rows drained across the executor loss)")
+      d.parity
     } catch { case e: Throwable =>
       System.err.println(s"[cluster] stream-kill check failed: $e"); false }
 

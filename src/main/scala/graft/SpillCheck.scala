@@ -27,9 +27,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The gate asserts BOTH halves: hashes unchanged (spilling changed
   * where bytes live, never results) AND total disk bytes spilled > 0
   * (the spill paths actually ran — a zero here means the gate measured
-  * nothing and FAILS). RocksDB's native memory is bounded separately
-  * (`boundedMemoryUsage` + 64 MiB cap) for the streaming point, whose
-  * parity is fingerprint-checked against batch replay in-session.
+  * nothing and FAILS). The replay point is the counting replay
+  * ([[BenchReplayEvent.countingReplay]]). RocksDB's native memory is
+  * bounded separately (`boundedMemoryUsage` + 64 MiB cap) for the
+  * streaming point: 400k deterministic ticks through the repo's one
+  * live-vs-replay parity drain ([[StreamBench.asOfDrain]]).
   *
   *   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   *   SPARK_GRAFT_SPILL_OUT=SPILL_r08.json \
@@ -66,23 +68,8 @@ object SpillCheck {
 
   private def fingerprint(df: DataFrame): (Long, Long) = StreamBench.fingerprint(df)
 
-  private def replayFingerprint(spark: SparkSession, sfDir: String): (Long, Long) = {
-    import spark.implicits._
-    val ev = graft.core.Tables.events(spark, sfDir)
-      .selectExpr("user_id", "unix_micros(ts) as ts_us", "event_id", "value")
-      .as[BenchReplayEvent]
-    fingerprint(
-      graft.streaming.Replay.run(ev, "user_id", "ts_us", "event_id")(
-          _.user_id, _.ts_us) { _ =>
-          new graft.streaming.KeyedStateMachine[Long, BenchReplayEvent, Long] {
-            private var seen = 0L
-            def onEvent(ts: Long, e: BenchReplayEvent,
-                        ctx: graft.streaming.ReplayCtx[Long]): Unit = {
-              seen += 1; ctx.emit(seen)
-            }
-          }
-        }.toDF())
-  }
+  private def replayFingerprint(spark: SparkSession, sfDir: String): (Long, Long) =
+    fingerprint(BenchReplayEvent.countingReplay(spark, sfDir)._2.toDF())
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx10")
@@ -166,76 +153,15 @@ object SpillCheck {
     // batch-replay parity in-session (the ClusterCheck workload shape)
     val streamOk = try {
       import spark.implicits._
-      import org.apache.spark.sql.functions._
-      val feeds = (0 until 8).map(i => s"spill-stream-$i")
-      feeds.foreach(graft.sources.GraftFeed.clear)
       val total = 400000L
-      var i = 0L
-      while (i < total) {
-        val t = StreamSoak.tickOf(i)
-        graft.sources.GraftFeed.push(feeds((t.user_id % 8).toInt), t.ts_us,
-          s"${t.user_id},${t.seq},${t.kind},${t.value}")
-        i += 1
-      }
-      val touched = Seq(
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
-        "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB",
-        "spark.sql.shuffle.partitions")
-      val saved = touched.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      spark.conf.set("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      spark.conf.set("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", "64")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val outN = new AtomicLong(0L); val outH = new AtomicLong(0L)
-        val src = spark.readStream.format("graft-feed")
-          .option("shards", feeds.mkString(","))
-          .option("maxPerTrigger", "50000")
-          .load()
-          .withWatermark("ts", "1 hour")
-        val parsed = src
-          .select(split(col("value"), ",").as("f"), unix_micros(col("ts")).as("ts_us"))
-          .select(col("f")(0).cast("long").as("user_id"), col("ts_us"),
-            col("f")(1).cast("long").as("seq"), col("f")(2).as("kind"),
-            col("f")(3).cast("double").as("value"))
-          .as[streaming.Machines.MarketTick]
-        val out = streaming.AspStream.run(parsed)(_.user_id, _.ts_us, _.seq)(
-          uid => new streaming.Machines.AsOfMachine(uid))
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-spill-stream").toString
-        val q = out.writeStream
-          .foreachBatch {
-            (ds: org.apache.spark.sql.Dataset[streaming.Machines.AsOfRow], _: Long) =>
-              val (bn, bh) = StreamBench.fingerprint(ds.toDF())
-              outN.addAndGet(bn); outH.addAndGet(bh); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000L), "spill-stream drain timed out")
-        val expected = StreamBench.fingerprint(
-          streaming.Replay.run(
-              spark.range(0L, total).map(i => StreamSoak.tickOf(i)),
-              "user_id", "ts_us", "seq")(_.user_id, _.ts_us)(
-              uid => new streaming.Machines.AsOfMachine(uid))
-            .toDF())
-        val p = (outN.get(), outH.get()) == expected
-        feeds.foreach(graft.sources.GraftFeed.clear)
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        def rmr(f: java.io.File): Unit = {
-          val k = f.listFiles(); if (k != null) k.foreach(rmr); f.delete(); ()
-        }
-        rmr(new java.io.File(ckpt))
-        if (!p) failures ::= s"stream: (${outN.get()},${outH.get()}) vs $expected"
-        p
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      val d = StreamBench.asOfDrain(spark, "spill",
+        (0L until total).iterator.map(StreamBench.tickOf),
+        spark.range(0L, total).map(i => StreamBench.tickOf(i)),
+        extraConfs = Seq(
+          "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
+          "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "64"))
+      if (!d.parity) failures ::= s"stream: ${d.stream} vs ${d.expected}"
+      d.parity
     } catch { case e: Throwable =>
       failures ::= s"stream: ${String.valueOf(e.getMessage).take(160)}"; false }
 

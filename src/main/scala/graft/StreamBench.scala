@@ -1,10 +1,12 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{AspStream, Machines, Replay}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.sources.GraftFeed
+import graft.streaming.{AspStream, KeyedStateMachine, Machines, Replay}
 
 /** Benchmark of the LIVE streaming path — the production half of the
   * past→live duality. [[Bench]]'s `replay_events_per_sec` measures batch
@@ -26,6 +28,10 @@ import graft.streaming.{AspStream, Machines, Replay}
   * same check shape would run at 100 TB. A parity failure zeroes the
   * reported rate (the driver must never read a wrong-answer throughput).
   *
+  * [[drain]] is the repo's one live-vs-replay parity drain: [[SpillCheck]]
+  * (bounded RocksDB memory) and [[ClusterCheck]] (executor loss mid-drain)
+  * run it too, through [[asOfDrain]].
+  *
   * The rate denominator is full wall time of each streaming query —
   * start-up, per-batch planning, state-store commits and all — because
   * that IS the live path's cost; `batch_avg_ms`/`batch_max_ms` break out
@@ -37,22 +43,11 @@ object StreamBench {
                           batches: Int, batchAvgMs: Long, batchMaxMs: Long,
                           parity: Boolean)
 
-  /** Standalone entry point for knob experiments (the in-bench path is
-    * [[Bench]] calling [[run]]): one JSON line per invocation. */
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Tables.configure(
-      org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val r = run(spark, sfDir)
-    println(s"""{"streaming_events_per_sec":${r.eventsPerSec},""" +
-      s""""events":${r.events},"wall_sec":${r.wallSec},""" +
-      s""""batches":${r.batches},"batch_avg_ms":${r.batchAvgMs},""" +
-      s""""batch_max_ms":${r.batchMaxMs},"parity":${r.parity},""" +
-      s""""state_partitions":$StatePartitions,"max_per_trigger":$MaxPerTrigger}""")
-    spark.stop()
+  /** One drain's outcome: `stream` and `expected` are the
+    * [[fingerprint]]s of the live output and of the batch replay. */
+  private[graft] final case class Drain(events: Long, wallSec: Double,
+      batchMs: Seq[Long], stream: (Long, Long), expected: (Long, Long)) {
+    def parity: Boolean = stream == expected
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -80,117 +75,157 @@ object StreamBench {
   // 15.7k ev/s, 50k → 32.9k (4 batches, avg 1.2s), 100k → 36.6k,
   // 200k → 39.8k — but ≥100k is the one-batch-per-workload regime
   // (avg trigger 1.9–2.1s, max 2.7–3.0s): batch execution wearing
-  // streaming clothes. 50k is kept as the default — the largest
-  // trigger that still exercises a real multi-batch cadence (state
-  // carried across triggers, admission slicing live) with per-trigger
-  // latency ≤ ~2s; the env knob exists for sweeps.
-  private val MaxPerTrigger =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_TRIGGER", "50000").toLong
+  // streaming clothes. 50k is kept — the largest trigger that still
+  // exercises a real multi-batch cadence (state carried across
+  // triggers, admission slicing live) with per-trigger latency ≤ ~2s.
+  private val MaxPerTrigger = 50000L
 
-  // State-partition count (each is one RocksDB instance with a fixed
-  // per-batch commit cost) — env-overridable for knob sweeps. Measured
-  // at sf0.1, 50k trigger: 4 partitions → 31.4k ev/s, 8 → 32.9k,
-  // 16 → 25.9k (commit floor × instances dominates past the key-space
-  // parallelism). 8 is the knee for the fixture's ~20k keys.
-  private val StatePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8").toInt
+  // State-partition count: each is one RocksDB instance with a fixed
+  // per-batch commit cost. Measured at sf0.1, 50k trigger: 4 partitions
+  // → 31.4k ev/s, 8 → 32.9k, 16 → 25.9k (commit floor × instances
+  // dominates past the key-space parallelism). 8 is the knee for the
+  // fixture's ~20k keys.
+  private val StatePartitions = 8
 
-  /** Push `rows` into `Shards` feeds by key (per-key order preserved:
-    * one key → one shard, pushed in (ts, tie) order), stream them back
-    * through `machine`, and fingerprint the output against the batch
-    * replay of the same dataset. Returns (events, wallSec, batchMs list,
-    * parity). */
-  private def runOne[I <: Product, O: org.apache.spark.sql.Encoder](
-      spark: SparkSession, name: String, input: Seq[I],
-      keyOf: I => Long, tsOf: I => Long, tieOf: I => Long, encode: I => String,
-      parse: DataFrame => Dataset[I],
-      batchOut: Dataset[O], machine: Long => graft.streaming.KeyedStateMachine[Long, I, O])
-      : (Long, Double, Seq[Long], Boolean) = {
-    implicit val keyEnc: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
-    val feeds = (0 until Shards).map(i => s"bench-$name-$i")
-    feeds.foreach(graft.sources.GraftFeed.clear)
-    input.foreach { r =>
-      graft.sources.GraftFeed.push(feeds((keyOf(r) % Shards).toInt), tsOf(r), encode(r))
-    }
-    val expected = fingerprint(batchOut.toDF())
-
-    val n = new AtomicLong(0L)
-    val h = new AtomicLong(0L)
-    val src = spark.readStream.format("graft-feed")
-      .option("shards", feeds.mkString(","))
-      .option("maxPerTrigger", MaxPerTrigger.toString)
-      .load()
-      .withWatermark("ts", "1 hour") // cross-shard skew bound (proportional admission)
-    val out = AspStream.run(parse(src))(keyOf, tsOf, tieOf)(machine)
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-sbench-$name").toString
-    val t0 = System.nanoTime()
-    val q = out.writeStream
-      .foreachBatch { (ds: Dataset[O], _: Long) =>
-        val (bn, bh) = fingerprint(ds.toDF())
-        n.addAndGet(bn); h.addAndGet(bh); ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      require(q.awaitTermination(600000L), s"stream bench $name did not drain")
-    } finally {
-      q.stop()
-      feeds.foreach(graft.sources.GraftFeed.clear)
-      // RocksDB checkpoint uploads are real disk: repeated bench rounds
-      // and knob sweeps would otherwise accumulate /tmp trees unbounded
-      deleteRecursively(new java.io.File(ckpt))
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(p => System.err.println(s"[stream-bench] ${p.json}"))
-    val batchMs = q.recentProgress.toSeq
-      .filter(_.numInputRows > 0)
-      .map(p => p.durationMs.getOrDefault("triggerExecution", 0L).toLong)
-    val parity = (n.get(), h.get()) == expected
-    if (!parity)
-      System.err.println(s"[stream-bench] $name parity FAILED: " +
-        s"stream (${n.get()}, ${h.get()}) vs batch $expected")
-    (input.size.toLong, wall, batchMs, parity)
-  }
-
-  def run(spark: SparkSession, sfDir: String): Result = {
-    import spark.implicits._
-    // Session confs this bench needs are saved and RESTORED (not just
-    // shuffle.partitions): leaking the state-store mode into a shared
-    // session would make later streaming work in the same JVM (specs,
-    // user queries) silently run under a different checkpointing mode
-    // than when run alone — order-dependent behavior.
-    val touched = Seq(
-      "spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "spark.sql.shuffle.partitions")
-    val saved = touched.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  // Session confs every drain sets, then RESTORES to their prior value
+  // (set or unset): leaking the state-store mode into a shared session
+  // would make later streaming work in the same JVM (specs, user
+  // queries) silently run under a different checkpointing mode than
+  // when run alone — order-dependent behavior.
+  private val DrainConfs = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     // Changelog checkpointing: per-batch state commit uploads the delta,
     // not a zipped full snapshot of every RocksDB instance — the
     // difference between O(state) and O(changes) per trigger, and the
     // production setting for any large-state stream.
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    // State partitions sized to the workload: each partition is a RocksDB
-    // instance with a FIXED per-batch commit cost (flush + fsync +
-    // checkpoint upload, ~1s each measured here), so partitions must be
-    // sized to hold real state — 32 instances for a fixture-scale key
-    // space is overhead, not parallelism (the same rule as shuffle
-    // partition sizing: grams of state per instance is misconfiguration).
-    // Restored after the bench; batch queries keep the session value.
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-    try runInner(spark, sfDir)
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    // State partitions sized to the workload (see StatePartitions): 32
+    // instances for a fixture-scale key space is overhead, not
+    // parallelism. Batch queries keep the session value.
+    "spark.sql.shuffle.partitions" -> StatePartitions.toString)
+
+  private val DrainTimeoutMs = 600000L
+
+  /** The feeds a drain named `name` pushes into (one per shard). */
+  private[graft] def feedNames(name: String): Seq[String] =
+    (0 until Shards).map(i => s"bench-$name-$i")
+
+  private val Keys = 20003L // prime: uniform key spread
+  private val BaseUs = 1704067200000000L
+
+  /** Deterministic tick i: a gate pushes the prefix 0..P-1 and batch
+    * replay regenerates the SAME prefix as its expected output.
+    * Integral doubles: the value string round-trips exactly. */
+  private[graft] def tickOf(i: Long): Machines.MarketTick =
+    Machines.MarketTick(
+      user_id = (i * 2654435761L) % Keys,
+      ts_us = BaseUs + i * 250L,
+      seq = i,
+      kind = if (i % 5 == 0) "trade" else "quote",
+      value = (i % 1000).toDouble)
+
+  /** Push `input` into `Shards` feeds by key (per-key order preserved:
+    * one key → one shard, pushed in (ts, tie) order), stream them back
+    * through `machine` under the drain confs plus `extraConfs`, and
+    * fingerprint the output against `batchOut`, the batch replay of the
+    * same input. `whileActive` runs once the query has started (fault
+    * injection); the query must then drain within the timeout. Feeds,
+    * state-store providers, checkpoint and confs are cleaned up on every
+    * path. */
+  private[graft] def drain[I <: Product, O: Encoder](
+      spark: SparkSession, name: String, input: Iterator[I],
+      keyOf: I => Long, tsOf: I => Long, tieOf: I => Long, encode: I => String,
+      parse: DataFrame => Dataset[I],
+      batchOut: Dataset[O], machine: Long => KeyedStateMachine[Long, I, O],
+      maxPerTrigger: Long = MaxPerTrigger,
+      extraConfs: Seq[(String, String)] = Nil,
+      whileActive: StreamingQuery => Unit = _ => ()): Drain = {
+    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
+    val confs = DrainConfs ++ extraConfs
+    // getAll holds only explicitly set keys: an unset key stays unset
+    // (getOption would read back, then pin, its default)
+    val prior = spark.conf.getAll
+    val saved = confs.map { case (k, _) => k -> prior.get(k) }
+    val feeds = feedNames(name)
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-sbench-$name").toString
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      feeds.foreach(GraftFeed.clear)
+      var events = 0L
+      input.foreach { r =>
+        GraftFeed.push(feeds((keyOf(r) % Shards).toInt), tsOf(r), encode(r))
+        events += 1
+      }
+      val expected = fingerprint(batchOut.toDF())
+
+      val n = new AtomicLong(0L)
+      val h = new AtomicLong(0L)
+      val src = spark.readStream.format("graft-feed")
+        .option("shards", feeds.mkString(","))
+        .option("maxPerTrigger", maxPerTrigger.toString)
+        .load()
+        .withWatermark("ts", "1 hour") // cross-shard skew bound (proportional admission)
+      val out = AspStream.run(parse(src))(keyOf, tsOf, tieOf)(machine)
+      val t0 = System.nanoTime()
+      val q = out.writeStream
+        .foreachBatch { (ds: Dataset[O], _: Long) =>
+          val (bn, bh) = fingerprint(ds.toDF())
+          n.addAndGet(bn); h.addAndGet(bh); ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try {
+        whileActive(q)
+        require(q.awaitTermination(DrainTimeoutMs), s"stream drain $name did not finish")
+      } finally q.stop()
+      val wall = (System.nanoTime() - t0) / 1e9
+      val batchMs = q.recentProgress.toSeq
+        .filter(_.numInputRows > 0)
+        .map(p => p.durationMs.getOrDefault("triggerExecution", 0L).toLong)
+      val d = Drain(events, wall, batchMs, (n.get(), h.get()), expected)
+      if (!d.parity)
+        System.err.println(s"[stream-bench] $name parity FAILED: " +
+          s"stream ${d.stream} vs batch $expected")
+      d
+    } finally {
+      feeds.foreach(GraftFeed.clear)
+      // unload every cached RocksDB provider BEFORE deleting its files:
+      // a delete under a live instance races its JNI logger into a
+      // native SIGSEGV (SCALING.md, state-store key cardinality)
+      StateStore.stop()
+      // RocksDB checkpoint uploads are real disk: repeated bench rounds
+      // would otherwise accumulate /tmp trees unbounded
+      deleteRecursively(new java.io.File(ckpt))
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
   }
 
-  private def runInner(spark: SparkSession, sfDir: String): Result = {
+  /** [[drain]] of W7: `ticks` through [[Machines.AsOfMachine]], checked
+    * against [[Replay.run]] of `batch` (the same ticks as a Dataset). */
+  private[graft] def asOfDrain(spark: SparkSession, name: String,
+      ticks: Iterator[Machines.MarketTick], batch: Dataset[Machines.MarketTick],
+      maxPerTrigger: Long = MaxPerTrigger,
+      extraConfs: Seq[(String, String)] = Nil,
+      whileActive: StreamingQuery => Unit = _ => ()): Drain = {
+    import spark.implicits._
+    drain[Machines.MarketTick, Machines.AsOfRow](
+      spark, name, ticks, _.user_id, _.ts_us, _.seq,
+      t => s"${t.user_id},${t.seq},${t.kind},${t.value}",
+      df => df.select(split($"value", ",").as("f"), unix_micros($"ts").as("ts_us"))
+        .select($"f"(0).cast("long").as("user_id"), $"ts_us",
+          $"f"(1).cast("long").as("seq"), $"f"(2).as("kind"),
+          $"f"(3).cast("double").as("value")).as[Machines.MarketTick],
+      Replay.run(batch, "user_id", "ts_us", "seq")(_.user_id, _.ts_us)(
+        uid => new Machines.AsOfMachine(uid)),
+      uid => new Machines.AsOfMachine(uid), maxPerTrigger, extraConfs, whileActive)
+  }
+
+  def run(spark: SparkSession, sfDir: String): Result = {
     import spark.implicits._
 
     // ---- W7: every event as a market tick through the as-of book ----
@@ -200,37 +235,28 @@ object StreamBench {
           .when($"event_type" === "purchase", "trade")
           .otherwise("other").as("kind"),
         $"value").as[Machines.MarketTick]
-    val ticks = ticksDs.collect().toSeq.sortBy(t => (t.ts_us, t.seq))
-    val asofBatch = Replay.run(ticksDs, "user_id", "ts_us", "seq")(
-      _.user_id, _.ts_us)(uid => new Machines.AsOfMachine(uid))
-    val (n1, w1, b1, p1) = runOne[Machines.MarketTick, Machines.AsOfRow](
-      spark, "asof", ticks, _.user_id, _.ts_us, _.seq,
-      t => s"${t.user_id},${t.seq},${t.kind},${t.value}",
-      df => df.select(split($"value", ",").as("f"), unix_micros($"ts").as("ts_us"))
-        .select($"f"(0).cast("long").as("user_id"), $"ts_us",
-          $"f"(1).cast("long").as("seq"), $"f"(2).as("kind"),
-          $"f"(3).cast("double").as("value")).as[Machines.MarketTick],
-      asofBatch, uid => new Machines.AsOfMachine(uid))
+    val ticks = ticksDs.collect().sortBy(t => (t.ts_us, t.seq))
+    val asof = asOfDrain(spark, "asof", ticks.iterator, ticksDs)
 
     // ---- W8: the q135 integer cart (list state + expiry timer) ----
     val (opsDs, expiry) = graft.queries.AspSemantics.cartOps(spark, sfDir)
-    val ops = opsDs.collect().toSeq.sortBy(o => (o.ts_us, o.event_id))
-    val cartBatch = Replay.run(opsDs, "user_id", "ts_us", "event_id")(
-      _.user_id, _.ts_us)(uid => new Machines.CartMachineQ(uid, expiry))
-    val (n2, w2, b2, p2) = runOne[Machines.CartOpQ, Machines.CartTotalQ](
-      spark, "cart", ops, _.user_id, _.ts_us, _.event_id,
+    val ops = opsDs.collect().sortBy(o => (o.ts_us, o.event_id))
+    val cart = drain[Machines.CartOpQ, Machines.CartTotalQ](
+      spark, "cart", ops.iterator, _.user_id, _.ts_us, _.event_id,
       o => s"${o.user_id},${o.event_id},${o.name},${o.cost},${o.qty},${o.add}",
       df => df.select(split($"value", ",").as("f"), unix_micros($"ts").as("ts_us"))
         .select($"f"(0).cast("long").as("user_id"), $"ts_us",
           $"f"(1).cast("long").as("event_id"), $"f"(2).as("name"),
           $"f"(3).cast("long").as("cost"), $"f"(4).cast("int").as("qty"),
           $"f"(5).cast("boolean").as("add")).as[Machines.CartOpQ],
-      cartBatch, uid => new Machines.CartMachineQ(uid, expiry))
+      Replay.run(opsDs, "user_id", "ts_us", "event_id")(_.user_id, _.ts_us)(
+        uid => new Machines.CartMachineQ(uid, expiry)),
+      uid => new Machines.CartMachineQ(uid, expiry))
 
-    val events = n1 + n2
-    val wall = w1 + w2
-    val batchMs = b1 ++ b2
-    val parity = p1 && p2
+    val events = asof.events + cart.events
+    val wall = asof.wallSec + cart.wallSec
+    val batchMs = asof.batchMs ++ cart.batchMs
+    val parity = asof.parity && cart.parity
     Result(
       eventsPerSec = if (parity && wall > 0) (events / wall).round else -1L,
       events = events, wallSec = wall, batches = batchMs.size,

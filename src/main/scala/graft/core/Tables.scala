@@ -102,17 +102,6 @@ object Tables {
       case _ => raw
     }
 
-  /** Session config every entry point needs: UTC semantics, ns-parquet
-    * compatibility, fixture-scale parallelism. Input splits default to
-    * 1 MB because these entry points (Verify/Bench/specs) read the
-    * FIXTURES, whose largest table is one ~11 MB parquet file — under
-    * Spark's 128 MB default that is a single scan task, 31 of 32 cores
-    * idle through every scan + partial-agg stage. The rule is splits ≈ a
-    * few per core per file; for production-sized files (128 MB–1 GB) set
-    * `SPARK_GRAFT_MAX_PARTITION_BYTES=128m` (or unset via sessions built
-    * without this helper) — the override exists precisely because 1 MB
-    * splits on a 128 GB table would mean ~128k tasks of pure scheduling
-    * overhead. */
   /** Entry-point builder honoring `SPARK_GRAFT_MASTER` — the
     * local-cluster standing gate runs Verify/ClusterCheck with e.g.
     * `SPARK_GRAFT_MASTER=local-cluster[2,8,4096]`: separate executor
@@ -133,6 +122,17 @@ object Tables {
     configure(sized, cpus)
   }
 
+  /** Session config every entry point needs: UTC semantics, ns-parquet
+    * compatibility, fixture-scale parallelism. Input splits default to
+    * 1 MB because these entry points (Verify/Bench/specs) read the
+    * FIXTURES, whose largest table is one ~11 MB parquet file — under
+    * Spark's 128 MB default that is a single scan task, 31 of 32 cores
+    * idle through every scan + partial-agg stage. The rule is splits ≈ a
+    * few per core per file; for production-sized files (128 MB–1 GB) set
+    * `SPARK_GRAFT_MAX_PARTITION_BYTES=128m` (or unset via sessions built
+    * without this helper) — the override exists precisely because 1 MB
+    * splits on a 128 GB table would mean ~128k tasks of pure scheduling
+    * overhead. */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")

@@ -17,4 +17,57 @@ class StreamBenchSpec extends AnyFunSuite {
     assert(r.events == 2000L) // 1000 ticks (W7) + 1000 cart ops (W8)
     assert(r.batches >= 2 && r.batchMaxMs >= r.batchAvgMs)
   }
+
+  private def ticks(n: Long) = (0L until n).iterator.map(graft.StreamBench.tickOf)
+  private def batchTicks(n: Long) = {
+    val sp = spark
+    import sp.implicits._
+    sp.range(0L, n).map(i => graft.StreamBench.tickOf(i))
+  }
+
+  test("drain: an expected batch with one extra row reports parity false with both fingerprints") {
+    // tick 1000 is a trade (every 5th tick is), so the batch replay of
+    // ticks 0..1000 emits exactly one row more than the stream of 0..999
+    val d = graft.StreamBench.asOfDrain(spark, "spec-mismatch", ticks(1000L), batchTicks(1001L))
+    assert(!d.parity)
+    assert(d.events == 1000L)
+    assert(d.stream._1 == 200L, s"stream fingerprint ${d.stream}")
+    assert(d.expected._1 == 201L, s"expected fingerprint ${d.expected}")
+    assert(d.stream._2 != d.expected._2)
+  }
+
+  test("drain: restores every conf it set, empties its feeds, deletes its checkpoint") {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val partitions = "spark.sql.shuffle.partitions"
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val extra = "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB"
+    val keys = Seq(provider, partitions, changelog, extra)
+    val original = keys.map(k => k -> spark.conf.getAll.get(k))
+    def restore(kvs: Seq[(String, Option[String])]): Unit = kvs.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // set before: provider (by TestSpark) and partitions (3, not the
+    // drain's 8); unset before: changelog and the caller's extra conf
+    restore(Seq(partitions -> Some("3"), changelog -> None, extra -> None))
+    try {
+      val before = keys.map(k => k -> spark.conf.getAll.get(k))
+      assert(before.toMap.apply(provider).isDefined)
+      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+      def ckpts = tmp.listFiles().count(_.getName.startsWith("graft-sbench-spec-cleanup"))
+      assert(ckpts == 0)
+
+      val d = graft.StreamBench.asOfDrain(spark, "spec-cleanup", ticks(1000L), batchTicks(1000L),
+        extraConfs = Seq(extra -> "64"))
+      assert(d.parity)
+
+      assert(keys.map(k => k -> spark.conf.getAll.get(k)) == before)
+      // an empty feed hands its next record seq 0
+      graft.StreamBench.feedNames("spec-cleanup").foreach { f =>
+        assert(graft.sources.GraftFeed.push(f, 0L, "probe") == 0L, s"feed $f not emptied")
+        graft.sources.GraftFeed.clear(f)
+      }
+      assert(ckpts == 0, "drain left its checkpoint directory behind")
+    } finally restore(original)
+  }
 }
