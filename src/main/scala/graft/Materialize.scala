@@ -85,7 +85,7 @@ object Materialize {
   private def sessionTag(spark: SparkSession): String =
     s"${spark.sparkContext.applicationId}-${System.identityHashCode(spark)}"
 
-  private def rmTree(f: java.io.File): Unit = {
+  private[graft] def rmTree(f: java.io.File): Unit = {
     val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree)
     f.delete(); ()
   }

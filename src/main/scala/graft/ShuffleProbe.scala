@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.SessionShim
 import java.util.concurrent.atomic.AtomicLong
 
 /** Shuffle-VOLUME evidence for SCALING.md: wall-time sublinearity on
@@ -80,14 +81,6 @@ object ShuffleProbe {
         }
       }
     })
-    // the listener bus is async — settle until the counters stop moving
-    def settle(): (Long, Long) = {
-      var prev = -1L; var cur = bytes.get() + records.get(); var spins = 0
-      while (prev != cur && spins < 40) {
-        prev = cur; Thread.sleep(100); cur = bytes.get() + records.get(); spins += 1
-      }
-      (bytes.get(), records.get())
-    }
 
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     // (dir, k) -> query -> (bytes, records, secs)
@@ -95,7 +88,8 @@ object ShuffleProbe {
     val measured = dirs.map { case (dir, k) =>
       val per = queries.map { q =>
         val fn = SparkEntry.queries(q)
-        settle(); bytes.set(0L); records.set(0L)
+        SessionShim.drainListenerBus(spark.sparkContext)
+        bytes.set(0L); records.set(0L)
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
@@ -104,7 +98,8 @@ object ShuffleProbe {
             errors += s"$q@$dir"; false
           }
         val secs = (System.nanoTime() - t0) / 1e9
-        val (b, r) = settle()
+        SessionShim.drainListenerBus(spark.sparkContext)
+        val (b, r) = (bytes.get(), records.get())
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
         spark.catalog.clearCache()

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.SessionShim
 
 /** Memory-pressure / SPILL gate (VERDICT r7 #2): every other gate runs
   * executors that never spill — 4 GiB heaps over ≤11 MB tables — so the
@@ -126,8 +127,7 @@ object SpillCheck {
         try (fingerprint(SparkEntry.queries(n)(spark, sfDir)), "")
         catch { case e: Throwable => ((-1L, -1L), String.valueOf(e.getMessage).take(120)) }
       val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are posted async; let the bus drain before reading
-      Thread.sleep(300)
+      SessionShim.drainListenerBus(spark.sparkContext)
       val (m, d) = listener.reset()
       val ok = fp == ref._1(n)
       if (!ok) failures ::= s"$n: $fp vs ${ref._1(n)} $err"
@@ -143,7 +143,7 @@ object SpillCheck {
       try (replayFingerprint(spark, sfDir), "")
       catch { case e: Throwable => ((-1L, -1L), String.valueOf(e.getMessage).take(120)) }
     val replaySec = (System.nanoTime() - tR) / 1e9
-    Thread.sleep(300)
+    SessionShim.drainListenerBus(spark.sparkContext)
     val (rm, rd) = listener.reset()
     val replayOk = replayFp == ref._2
     if (!replayOk) failures ::= s"replay: $replayFp vs ${ref._2} $replayErr"

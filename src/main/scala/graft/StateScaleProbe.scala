@@ -1,44 +1,50 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import scala.collection.mutable
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
-import graft.streaming.{AspStream, Machines}
+import org.apache.spark.sql.SparkSession
+import graft.streaming.Machines
 
 /** State-store SCALE probe for the machine path: the knob sweeps to
   * date varied partitions and trigger size at a fixed ~20k-key fixture;
   * this varies KEY CARDINALITY — the axis that actually grows at
   * 100 TB (every user/instrument/session is a key with machine state).
-  * For each K it drives N events with K distinct keys through
-  * GraftFeed → `AspStream.run` (transformWithState, one RocksDB
+  * For each K it drives N ticks with K distinct keys through
+  * [[StreamBench.asOfDrain]] (GraftFeed → `AspStream.run`, one RocksDB
   * value-state row per key, changelog checkpointing) and measures:
   *
   *  - drain throughput and per-batch latency at that key count;
   *  - RocksDB footprint (state rows, SST bytes) from the progress
   *    metrics — the driver never holds the keys;
   *  - RESTART recovery: a second query on the SAME checkpoint (new
-  *    records pushed after the drain) must reload/replay state for all
+  *    ticks pushed after the drain) must reload/replay state for all
   *    K keys before its first batch commits — `recovery_first_batch_ms`
-  *    is that reload cost, the number a production restart pays.
+  *    is that reload cost, the number a production restart pays;
+  *  - `parity` of both queries' output with `Replay.run` of the same
+  *    ticks, required on every cardinality run.
   *
   *   SPARK_GRAFT_STATE_OUT=STATESCALE_r07.json \
   *     sbt "runMain graft.StateScaleProbe"
   *   knobs: SPARK_GRAFT_STATE_KEYS=20000,200000,2000000
   *          SPARK_GRAFT_STATE_EVENTS=3000000
-  *          SPARK_GRAFT_STREAM_PARTITIONS=8
+  *          SPARK_GRAFT_STATE_CHANGELOG=true (false: full-snapshot commits)
   */
 object StateScaleProbe {
-  private val Shards = 8
   private val BaseUs = 1704067200000000L
+  private val StepUs = 50L // event time between ticks
+  private val MaxPerTrigger = 100000L
+  private val RestartEvents = 100000L
+  private val ChurnTtlUs = 5000000L
+  private val Changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** Tick i over `keys` keys: every 5th is a trade, one output row. */
+  private def tick(keys: Long)(i: Long): Machines.MarketTick =
+    Machines.MarketTick(i % keys, BaseUs + i * StepUs, i,
+      if (i % 5 == 0) "trade" else "quote", (i % 1000).toDouble)
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val keyCounts = sys.env.getOrElse("SPARK_GRAFT_STATE_KEYS",
       "20000,200000,2000000").split(",").map(_.trim.toLong).toSeq
     val events = sys.env.getOrElse("SPARK_GRAFT_STATE_EVENTS", "3000000").toLong
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8").toInt
     // r10 A/B knob (VERDICT r9 #1): changelog checkpointing ON (per-batch
     // delta upload, default — the mode every prior STATESCALE artifact
     // measured) vs OFF (full-snapshot commit) — the failover-budget lever
@@ -51,32 +57,18 @@ object StateScaleProbe {
         "SPARK_GRAFT_STATE_CHANGELOG must be true or false, got " +
           s"'${sys.env("SPARK_GRAFT_STATE_CHANGELOG")}'"))
       .toString
-    val spark = graft.core.Tables.sessionBuilder(cpus)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", changelog)
-      .getOrCreate()
+    val spark = graft.core.Tables.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
 
-    val rows = keyCounts.map(k => runOne(spark, k, events, parts))
+    val rows = keyCounts.map(k => runOne(spark, k, events, changelog))
     // churn mode (VERDICT r7 #3): every event a NEW key — the unbounded
     // key space that makes eternal state an OOM — with idle-TTL eviction
     // keeping resident state bounded by the (ttl + watermark) window.
-    // SPARK_GRAFT_STATE_CHURN=skip omits it (the r10 changelog A/B varies
-    // only the checkpoint mode; re-running churn per mode adds a full
-    // drain without informing the A/B).
-    val churnField =
-      if (sys.env.get("SPARK_GRAFT_STATE_CHURN").contains("skip")) ""
-      else {
-        val churnRow = runOne(spark, events, events, parts,
-          churnTtlUs = sys.env.getOrElse("SPARK_GRAFT_STATE_TTL_US", "5000000").toLong)
-        s""","churn":$churnRow"""
-      }
+    val churnRow = runOne(spark, events, events, changelog, churnTtlUs = ChurnTtlUs)
     val body = s"""{"workload":"per-key machine state at growing key cardinality",""" +
-      s""""events_per_run":$events,"state_partitions":$parts,""" +
+      s""""events_per_run":$events,"state_partitions":${StreamBench.StatePartitions},""" +
       s""""changelog_checkpointing":$changelog,""" +
-      s""""runs":[${rows.mkString(",")}]$churnField}"""
+      s""""runs":[${rows.mkString(",")}],"churn":$churnRow}"""
     sys.env.get("SPARK_GRAFT_STATE_OUT").foreach { p =>
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -86,113 +78,37 @@ object StateScaleProbe {
   }
 
   private def runOne(spark: SparkSession, keys: Long, events: Long,
-                     parts: Int, churnTtlUs: Long = 0L): String = {
+                     changelog: String, churnTtlUs: Long = 0L): String = {
     import spark.implicits._
-    val feeds = (0 until Shards).map(i => s"statescale-$i")
-    feeds.foreach(graft.sources.GraftFeed.clear)
-    def push(from: Long, until: Long): Unit = {
-      var i = from
-      while (i < until) {
-        val uid = i % keys
-        val kind = if (i % 5 == 0) "trade" else "quote"
-        graft.sources.GraftFeed.push(feeds((uid % Shards).toInt),
-          BaseUs + i * 50L, s"$uid,$i,$kind,${(i % 1000).toDouble}")
-        i += 1
-      }
-    }
-
-    val outRows = new AtomicLong(0L)
-    val batches = mutable.ArrayBuffer.empty[(Long, Long, Long, Long)] // trigMs, rows, stateRows, sstBytes
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) {
-          var st = 0L; var sst = 0L
-          p.stateOperators.foreach { o =>
-            st += o.numRowsTotal
-            val it = o.customMetrics.entrySet().iterator()
-            while (it.hasNext) {
-              val kv = it.next()
-              if (kv.getKey.toLowerCase.contains("sstfilessize") ||
-                  kv.getKey.toLowerCase.contains("sstfilesize"))
-                sst += kv.getValue.longValue()
-            }
-          }
-          batches.synchronized {
-            batches += ((p.durationMs.getOrDefault("triggerExecution", 0L),
-              p.numInputRows, st, sst))
-          }
-        }
-      }
-    }
-    spark.streams.addListener(listener)
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-ss-$keys").toString
-
-    def startQuery(): org.apache.spark.sql.streaming.StreamingQuery = {
+    val total = events + RestartEvents
+    // phase 1 drains `events` ticks, building K state entries; phase 2
+    // RESTARTS on the same checkpoint with fresh ticks — its first batch
+    // pays the full K-key state reload
+    val d = StreamBench.asOfDrain(spark, s"statescale-$keys",
+      (0L until events).iterator.map(tick(keys)),
+      spark.range(0L, total).map(i => tick(keys)(i)),
+      maxPerTrigger = MaxPerTrigger,
+      extraConfs = Seq(Changelog -> changelog),
       // churn mode needs the watermark to actually pass eviction dues
-      // DURING the drain (event time advances 50 µs/event), so its
-      // delay is 1 s of event time; the cardinality runs keep the 1 h
-      // delay (no eviction — the original never-forget curve)
-      val src = spark.readStream.format("graft-feed")
-        .option("shards", feeds.mkString(","))
-        .option("maxPerTrigger", "100000")
-        .load()
-        .withWatermark("ts", if (churnTtlUs > 0) "1 second" else "1 hour")
-      val parsed = src
-        .select(split($"value", ",").as("f"), unix_micros($"ts").as("ts_us"))
-        .select($"f"(0).cast("long").as("user_id"), $"ts_us",
-          $"f"(1).cast("long").as("seq"), $"f"(2).as("kind"),
-          $"f"(3).cast("double").as("value")).as[Machines.MarketTick]
-      AspStream.run(parsed)(_.user_id, _.ts_us, _.seq, idleTtlUs = churnTtlUs)(
-          uid => new Machines.AsOfMachine(uid))
-        .writeStream
-        .foreachBatch { (ds: Dataset[Machines.AsOfRow], _: Long) =>
-          outRows.addAndGet(ds.count()); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-
-    // phase 1: drain `events` rows, building K state entries
-    push(0, events)
-    val t0 = System.nanoTime()
-    val q1 = startQuery()
-    require(q1.awaitTermination(900000L), s"state-scale drain (K=$keys) timed out")
-    val drainWall = (System.nanoTime() - t0) / 1e9
-    val drainSnap = batches.synchronized { val v = batches.toVector; batches.clear(); v }
-    // every 5th event is a trade; the machine emits one row per trade —
-    // a silent-truncation guard, not a parity gate (StreamBench owns parity)
-    val expectedOut = (events + 4) / 5
-    require(outRows.get() == expectedOut,
-      s"state-scale output rows ${outRows.get()} != expected $expectedOut")
-
-    // phase 2: RESTART on the same checkpoint with fresh records — the
-    // first batch pays the full K-key state reload
-    push(events, events + 100000)
-    val t1 = System.nanoTime()
-    val q2 = startQuery()
-    require(q2.awaitTermination(900000L), s"state-scale restart (K=$keys) timed out")
-    val restartWall = (System.nanoTime() - t1) / 1e9
-    val restartSnap = batches.synchronized { val v = batches.toVector; batches.clear(); v }
-
-    spark.streams.removeListener(listener)
-    feeds.foreach(graft.sources.GraftFeed.clear)
-    // unload every cached RocksDB provider BEFORE deleting its files:
-    // the executor-side provider cache holds instances past query stop
-    // (the maintenance thread unloads lazily), and a delete-under-live-
-    // RocksDB races its JNI logger into a native SIGSEGV at teardown
-    // (observed at the 437 MB / 2M-key scale)
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    def rmr(f: java.io.File): Unit = {
-      val k = f.listFiles(); if (k != null) k.foreach(rmr); f.delete(); ()
-    }
-    rmr(new java.io.File(ckpt))
+      // DURING the drain, so its delay is 1 s of event time; the
+      // cardinality runs keep the 1 h delay (no eviction — the original
+      // never-forget curve)
+      watermarkDelay = if (churnTtlUs > 0) "1 second" else "1 hour",
+      idleTtlUs = churnTtlUs,
+      restart = (events until total).iterator.map(tick(keys)))
+    val expectedOut = (total + 4) / 5
+    require(d.stream._1 == expectedOut,
+      s"state-scale output rows ${d.stream._1} != expected $expectedOut")
+    // TTL eviction forgets what never-forget replay remembers (the
+    // AspStream.run scaladoc), so churn reports parity without gating on it
+    if (churnTtlUs == 0) require(d.parity,
+      s"state-scale K=$keys live output ${d.stream} != batch replay ${d.expected}")
+    val Seq(drain, restart) = d.phases
+    val batches = drain.batches.filter(_.inputRows > 0)
 
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", v)
-    val maxStateRows = if (drainSnap.nonEmpty) drainSnap.map(_._3).max else 0L
+    def maxOf(f: StreamBench.Batch => Long) = if (batches.nonEmpty) batches.map(f).max else 0L
+    val maxStateRows = maxOf(_.stateRows)
     // the churn gate itself: every event was a distinct key, so without
     // eviction resident state would reach `keys`; TTL'd state must stay
     // under the EVENT-TIME WINDOW bound instead — keys active within
@@ -200,9 +116,7 @@ object StateScaleProbe {
     // lag (the watermark commits at batch end; the timer fires a batch
     // later). The bound is independent of total key count, which is the
     // whole claim: resident state is O(window), not O(stream).
-    val stepUs = 50L                       // push() event-time step
-    val triggerSpanUs = 100000L * stepUs   // maxPerTrigger * step
-    val residentBound = (churnTtlUs + 1000000L + 2 * triggerSpanUs) / stepUs
+    val residentBound = (churnTtlUs + 1000000L + 2 * MaxPerTrigger * StepUs) / StepUs
     if (churnTtlUs > 0) require(maxStateRows <= residentBound,
       s"churn state not bounded: $maxStateRows resident of $keys distinct " +
         s"keys exceeds the eviction-window bound $residentBound")
@@ -213,14 +127,15 @@ object StateScaleProbe {
     else ""
     val line =
       s"""{$churnFields"keys":$keys,"events":$events,""" +
-      s""""drain_sec":${fmt(drainWall)},"events_per_sec":${(events / drainWall).round},""" +
-      s""""batches":${drainSnap.size},""" +
-      s""""avg_batch_ms":${if (drainSnap.nonEmpty) drainSnap.map(_._1).sum / drainSnap.size else 0},""" +
-      s""""max_batch_ms":${if (drainSnap.nonEmpty) drainSnap.map(_._1).max else 0},""" +
+      s""""drain_sec":${fmt(drain.wallSec)},"events_per_sec":${(events / drain.wallSec).round},""" +
+      s""""batches":${batches.size},""" +
+      s""""avg_batch_ms":${if (batches.nonEmpty) batches.map(_.triggerMs).sum / batches.size else 0},""" +
+      s""""max_batch_ms":${maxOf(_.triggerMs)},""" +
       s""""state_rows":$maxStateRows,""" +
-      s""""rocksdb_sst_bytes":${if (drainSnap.nonEmpty) drainSnap.map(_._4).max else 0},""" +
-      s""""restart_total_sec":${fmt(restartWall)},""" +
-      s""""recovery_first_batch_ms":${restartSnap.headOption.map(_._1).getOrElse(-1L)}}"""
+      s""""rocksdb_sst_bytes":${maxOf(_.sstBytes)},""" +
+      s""""restart_total_sec":${fmt(restart.wallSec)},""" +
+      s""""recovery_first_batch_ms":${restart.batches.find(_.inputRows > 0).map(_.triggerMs).getOrElse(-1L)},""" +
+      s""""parity":${d.parity}}"""
     System.err.println(s"[state-scale] $line")
     line
   }

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
@@ -28,9 +29,10 @@ import graft.streaming.{AspStream, KeyedStateMachine, Machines, Replay}
   * same check shape would run at 100 TB. A parity failure zeroes the
   * reported rate (the driver must never read a wrong-answer throughput).
   *
-  * [[drain]] is the repo's one live-vs-replay parity drain: [[SpillCheck]]
-  * (bounded RocksDB memory) and [[ClusterCheck]] (executor loss mid-drain)
-  * run it too, through [[asOfDrain]].
+  * [[drain]] is the repo's one live-vs-replay parity drain, with four
+  * callers: [[run]] here, and through [[asOfDrain]] [[SpillCheck]]
+  * (bounded RocksDB memory), [[ClusterCheck]] (executor loss mid-drain)
+  * and [[StateScaleProbe]] (key cardinality, TTL churn, restart).
   *
   * The rate denominator is full wall time of each streaming query —
   * start-up, per-batch planning, state-store commits and all — because
@@ -43,17 +45,23 @@ object StreamBench {
                           batches: Int, batchAvgMs: Long, batchMaxMs: Long,
                           parity: Boolean)
 
-  /** One drain's outcome: `stream` and `expected` are the
-    * [[fingerprint]]s of the live output and of the batch replay. */
-  private[graft] final case class Drain(events: Long, wallSec: Double,
-      batchMs: Seq[Long], stream: (Long, Long), expected: (Long, Long)) {
-    def parity: Boolean = stream == expected
-  }
+  /** One micro-batch's progress: trigger ms, input rows, and over every
+    * stateful operator the state rows and RocksDB SST file bytes. */
+  private[graft] final case class Batch(triggerMs: Long, inputRows: Long, stateRows: Long,
+      sstBytes: Long)
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(); ()
+  /** One query of a drain: records pushed, wall time, every micro-batch. */
+  private[graft] final case class Phase(events: Long, wallSec: Double, batches: Seq[Batch])
+
+  /** One drain's outcome: `stream` and `expected` are the [[fingerprint]]s
+    * of the live output of every phase and of the batch replay. */
+  private[graft] final case class Drain(phases: Seq[Phase], stream: (Long, Long),
+      expected: (Long, Long)) {
+    def parity: Boolean = stream == expected
+    def events: Long = phases.map(_.events).sum
+    def wallSec: Double = phases.map(_.wallSec).sum
+    /** Trigger ms of every batch that read input. */
+    def batchMs: Seq[Long] = phases.flatMap(_.batches).filter(_.inputRows > 0).map(_.triggerMs)
   }
 
   /** Order-independent output fingerprint: count + Σ pmod(xxhash64, p).
@@ -85,7 +93,7 @@ object StreamBench {
   // → 31.4k ev/s, 8 → 32.9k, 16 → 25.9k (commit floor × instances
   // dominates past the key-space parallelism). 8 is the knee for the
   // fixture's ~20k keys.
-  private val StatePartitions = 8
+  private[graft] val StatePartitions = 8
 
   // Session confs every drain sets, then RESTORES to their prior value
   // (set or unset): leaking the state-store mode into a shared session
@@ -103,7 +111,10 @@ object StreamBench {
     // State partitions sized to the workload (see StatePartitions): 32
     // instances for a fixture-scale key space is overhead, not
     // parallelism. Batch queries keep the session value.
-    "spark.sql.shuffle.partitions" -> StatePartitions.toString)
+    "spark.sql.shuffle.partitions" -> StatePartitions.toString,
+    // keep every progress report: the drain returns each micro-batch
+    // (the default keeps the last 100, and a long drain runs more)
+    "spark.sql.streaming.numRecentProgressUpdates" -> Int.MaxValue.toString)
 
   private val DrainTimeoutMs = 600000L
 
@@ -125,14 +136,35 @@ object StreamBench {
       kind = if (i % 5 == 0) "trade" else "quote",
       value = (i % 1000).toDouble)
 
+  private val SstKey = ".*sstfiles?size.*".r
+
+  /** Every micro-batch of `q`'s run, whose first batch id is `first`. A
+    * missing id fails loudly instead of under-reporting the drain. */
+  private def batchesOf(q: StreamingQuery, first: Long): Seq[Batch] = {
+    val ps = q.recentProgress.toSeq
+    require(ps.map(_.batchId) == (first until first + ps.size),
+      s"drain progress has batch ids ${ps.map(_.batchId)}, expected every id from $first")
+    ps.map { p =>
+      val ops = p.stateOperators.toSeq
+      Batch(p.durationMs.getOrDefault("triggerExecution", 0L).toLong, p.numInputRows,
+        ops.map(_.numRowsTotal).sum,
+        ops.flatMap(_.customMetrics.asScala.collect {
+          case (k, v) if SstKey.matches(k.toLowerCase) => v.longValue
+        }).sum)
+    }
+  }
+
   /** Push `input` into `Shards` feeds by key (per-key order preserved:
     * one key → one shard, pushed in (ts, tie) order), stream them back
-    * through `machine` under the drain confs plus `extraConfs`, and
-    * fingerprint the output against `batchOut`, the batch replay of the
-    * same input. `whileActive` runs once the query has started (fault
-    * injection); the query must then drain within the timeout. Feeds,
-    * state-store providers, checkpoint and confs are cleaned up on every
-    * path. */
+    * through `machine` under the drain confs plus `extraConfs` (a later
+    * entry overrides an earlier one), and fingerprint the output against
+    * `batchOut`, the batch replay of the same input. `whileActive` runs
+    * once the first query has started (fault injection); the query must
+    * then drain within the timeout. A non-empty `restart` is pushed after
+    * the first query drains and read by a second query on the same
+    * checkpoint, so `batchOut` must cover both inputs. `idleTtlUs` goes to
+    * [[AspStream.run]]. Feeds, state-store providers, checkpoint and confs
+    * are cleaned up on every path. */
   private[graft] def drain[I <: Product, O: Encoder](
       spark: SparkSession, name: String, input: Iterator[I],
       keyOf: I => Long, tsOf: I => Long, tieOf: I => Long, encode: I => String,
@@ -140,7 +172,10 @@ object StreamBench {
       batchOut: Dataset[O], machine: Long => KeyedStateMachine[Long, I, O],
       maxPerTrigger: Long = MaxPerTrigger,
       extraConfs: Seq[(String, String)] = Nil,
-      whileActive: StreamingQuery => Unit = _ => ()): Drain = {
+      whileActive: StreamingQuery => Unit = _ => (),
+      watermarkDelay: String = "1 hour",
+      idleTtlUs: Long = 0L,
+      restart: Iterator[I] = Iterator.empty): Drain = {
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
     val confs = DrainConfs ++ extraConfs
     // getAll holds only explicitly set keys: an unset key stays unset
@@ -149,24 +184,17 @@ object StreamBench {
     val saved = confs.map { case (k, _) => k -> prior.get(k) }
     val feeds = feedNames(name)
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft-sbench-$name").toString
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      feeds.foreach(GraftFeed.clear)
-      var events = 0L
-      input.foreach { r =>
-        GraftFeed.push(feeds((keyOf(r) % Shards).toInt), tsOf(r), encode(r))
-        events += 1
-      }
-      val expected = fingerprint(batchOut.toDF())
-
-      val n = new AtomicLong(0L)
-      val h = new AtomicLong(0L)
+    val n = new AtomicLong(0L)
+    val h = new AtomicLong(0L)
+    def push(in: Iterator[I]): Long =
+      in.map { r => GraftFeed.push(feeds((keyOf(r) % Shards).toInt), tsOf(r), encode(r)); 1L }.sum
+    def runQuery(events: Long, first: Long, during: StreamingQuery => Unit): Phase = {
       val src = spark.readStream.format("graft-feed")
         .option("shards", feeds.mkString(","))
         .option("maxPerTrigger", maxPerTrigger.toString)
         .load()
-        .withWatermark("ts", "1 hour") // cross-shard skew bound (proportional admission)
-      val out = AspStream.run(parse(src))(keyOf, tsOf, tieOf)(machine)
+        .withWatermark("ts", watermarkDelay) // cross-shard skew bound (proportional admission)
+      val out = AspStream.run(parse(src))(keyOf, tsOf, tieOf, idleTtlUs)(machine)
       val t0 = System.nanoTime()
       val q = out.writeStream
         .foreachBatch { (ds: Dataset[O], _: Long) =>
@@ -177,14 +205,20 @@ object StreamBench {
         .trigger(Trigger.AvailableNow())
         .start()
       try {
-        whileActive(q)
+        during(q)
         require(q.awaitTermination(DrainTimeoutMs), s"stream drain $name did not finish")
       } finally q.stop()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val batchMs = q.recentProgress.toSeq
-        .filter(_.numInputRows > 0)
-        .map(p => p.durationMs.getOrDefault("triggerExecution", 0L).toLong)
-      val d = Drain(events, wall, batchMs, (n.get(), h.get()), expected)
+      Phase(events, (System.nanoTime() - t0) / 1e9, batchesOf(q, first))
+    }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      feeds.foreach(GraftFeed.clear)
+      val events = push(input)
+      val expected = fingerprint(batchOut.toDF())
+      val drained = runQuery(events, 0L, whileActive)
+      val again =
+        if (restart.hasNext) Seq(runQuery(push(restart), drained.batches.size, _ => ())) else Nil
+      val d = Drain(drained +: again, (n.get(), h.get()), expected)
       if (!d.parity)
         System.err.println(s"[stream-bench] $name parity FAILED: " +
           s"stream ${d.stream} vs batch $expected")
@@ -197,7 +231,7 @@ object StreamBench {
       StateStore.stop()
       // RocksDB checkpoint uploads are real disk: repeated bench rounds
       // would otherwise accumulate /tmp trees unbounded
-      deleteRecursively(new java.io.File(ckpt))
+      Materialize.rmTree(new java.io.File(ckpt))
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
@@ -206,12 +240,16 @@ object StreamBench {
   }
 
   /** [[drain]] of W7: `ticks` through [[Machines.AsOfMachine]], checked
-    * against [[Replay.run]] of `batch` (the same ticks as a Dataset). */
+    * against [[Replay.run]] of `batch` (the same ticks, then the `restart`
+    * ticks, as a Dataset). */
   private[graft] def asOfDrain(spark: SparkSession, name: String,
       ticks: Iterator[Machines.MarketTick], batch: Dataset[Machines.MarketTick],
       maxPerTrigger: Long = MaxPerTrigger,
       extraConfs: Seq[(String, String)] = Nil,
-      whileActive: StreamingQuery => Unit = _ => ()): Drain = {
+      whileActive: StreamingQuery => Unit = _ => (),
+      watermarkDelay: String = "1 hour",
+      idleTtlUs: Long = 0L,
+      restart: Iterator[Machines.MarketTick] = Iterator.empty): Drain = {
     import spark.implicits._
     drain[Machines.MarketTick, Machines.AsOfRow](
       spark, name, ticks, _.user_id, _.ts_us, _.seq,
@@ -222,7 +260,8 @@ object StreamBench {
           $"f"(3).cast("double").as("value")).as[Machines.MarketTick],
       Replay.run(batch, "user_id", "ts_us", "seq")(_.user_id, _.ts_us)(
         uid => new Machines.AsOfMachine(uid)),
-      uid => new Machines.AsOfMachine(uid), maxPerTrigger, extraConfs, whileActive)
+      uid => new Machines.AsOfMachine(uid), maxPerTrigger, extraConfs, whileActive,
+      watermarkDelay, idleTtlUs, restart)
   }
 
   def run(spark: SparkSession, sfDir: String): Result = {

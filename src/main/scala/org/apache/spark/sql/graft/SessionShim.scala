@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.Dataset
@@ -7,7 +8,7 @@ import org.apache.spark.sql.classic.Dataset
 /** Compiler-checked access to two `private[sql]` seams of the classic
   * Spark session — the minimum surface the engine needs to plan ONE
   * subtree under a different SQL conf without mutating the shared
-  * session conf.
+  * session conf — and to the `private[spark]` listener bus.
   *
   * Why this exists (r11, VERDICT r10 #7): `Materialize.eager` must plan
   * its `localCheckpoint` subtree with AQE OFF so the checkpointed
@@ -76,4 +77,9 @@ object SessionShim {
       Dataset.ofRows(session, cp.logicalPlan)
     }
   }
+
+  /** Blocks until every event already posted to `sc`'s listener bus has
+    * been delivered: the bus is asynchronous, so a listener's counters
+    * are complete for the work finished before this call only after it. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.util.Try
-import org.apache.spark.TestBus
+import org.apache.spark.sql.graft.SessionShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, min}
@@ -161,10 +161,10 @@ class TablesSpec extends AnyFunSuite {
     sc.setJobGroup(group, "tables-spec counted gate")
     try {
       def jobsOf(load: => DataFrame): Int = {
-        TestBus.drain(sc)
+        SessionShim.drainListenerBus(sc)
         val before = jobs.get()
         load
-        TestBus.drain(sc)
+        SessionShim.drainListenerBus(sc)
         jobs.get() - before
       }
       assert(jobsOf(Tables.orders(s, sf)) == 1)

@@ -70,4 +70,38 @@ class StreamBenchSpec extends AnyFunSuite {
       assert(ckpts == 0, "drain left its checkpoint directory behind")
     } finally restore(original)
   }
+
+  test("drain: reports every micro-batch when the session keeps only 2 progress reports") {
+    val retention = "spark.sql.streaming.numRecentProgressUpdates"
+    val original = spark.conf.getAll.get(retention)
+    spark.conf.set(retention, "2")
+    try {
+      val d = graft.StreamBench.asOfDrain(spark, "spec-progress", ticks(1000L), batchTicks(1000L),
+        maxPerTrigger = 200L)
+      assert(d.parity)
+      assert(d.batchMs.size == 5, s"ceil(1000 / 200) input batches, got ${d.batchMs}")
+      assert(spark.conf.get(retention) == "2")
+    } finally original match {
+      case Some(v) => spark.conf.set(retention, v)
+      case None => spark.conf.unset(retention)
+    }
+  }
+
+  test("drain: a restart on the same checkpoint carries state into the second query") {
+    val sp = spark
+    import sp.implicits._
+    def tick(k: Long, seq: Long, kind: String) =
+      Machines.MarketTick(k, 1704067200000000L + seq * 1000L, seq, kind, k.toDouble)
+    // first input: a quote then a trade per key; restart input: one more
+    // trade per key, answered only from the quote the first query stored
+    val first = (0L until 100L).flatMap(k => Seq(tick(k, k, "quote"), tick(k, 100L + k, "trade")))
+    val again = (0L until 100L).map(k => tick(k, 200L + k, "trade"))
+    val d = graft.StreamBench.asOfDrain(spark, "spec-restart", first.iterator,
+      (first ++ again).toDS(), restart = again.iterator)
+    assert(d.parity, s"stream ${d.stream} vs replay ${d.expected}")
+    assert(d.stream._1 == 200L)
+    assert(d.phases.map(_.events) == Seq(200L, 100L))
+    assert(d.phases(1).batches.exists(b => b.inputRows > 0 && b.stateRows > 0),
+      s"restart progress ${d.phases(1).batches}")
+  }
 }
