@@ -11,7 +11,8 @@ import graft.streaming.Machines
   * [[StreamBench.asOfDrain]] (GraftFeed → `AspStream.run`, one RocksDB
   * value-state row per key, changelog checkpointing) and measures:
   *
-  *  - drain throughput and per-batch latency at that key count;
+  *  - drain throughput and per-batch latency at that key count, with
+  *    the per-batch state commit and state update ms beside it;
   *  - RocksDB footprint (state rows, SST bytes) from the progress
   *    metrics — the driver never holds the keys;
   *  - RESTART recovery: a second query on the SAME checkpoint (new
@@ -108,6 +109,7 @@ object StateScaleProbe {
 
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", v)
     def maxOf(f: StreamBench.Batch => Long) = if (batches.nonEmpty) batches.map(f).max else 0L
+    def avgOf(f: StreamBench.Batch => Long) = if (batches.nonEmpty) batches.map(f).sum / batches.size else 0L
     val maxStateRows = maxOf(_.stateRows)
     // the churn gate itself: every event was a distinct key, so without
     // eviction resident state would reach `keys`; TTL'd state must stay
@@ -129,7 +131,9 @@ object StateScaleProbe {
       s"""{$churnFields"keys":$keys,"events":$events,""" +
       s""""drain_sec":${fmt(drain.wallSec)},"events_per_sec":${(events / drain.wallSec).round},""" +
       s""""batches":${batches.size},""" +
-      s""""avg_batch_ms":${if (batches.nonEmpty) batches.map(_.triggerMs).sum / batches.size else 0},""" +
+      s""""avg_batch_ms":${avgOf(_.triggerMs)},""" +
+      s""""avg_state_commit_ms":${avgOf(_.stateCommitMs)},""" +
+      s""""avg_state_update_ms":${avgOf(_.stateUpdateMs)},""" +
       s""""max_batch_ms":${maxOf(_.triggerMs)},""" +
       s""""state_rows":$maxStateRows,""" +
       s""""rocksdb_sst_bytes":${maxOf(_.sstBytes)},""" +

@@ -45,10 +45,12 @@ object StreamBench {
                           batches: Int, batchAvgMs: Long, batchMaxMs: Long,
                           parity: Boolean)
 
-  /** One micro-batch's progress: trigger ms, input rows, and over every
-    * stateful operator the state rows and RocksDB SST file bytes. */
+  /** One micro-batch's progress: trigger ms, input rows, and summed over
+    * every stateful operator the state rows, RocksDB SST file bytes, the
+    * state commit ms (`commitTimeMs`) and the ms spent updating state
+    * (`allUpdatesTimeMs`, which includes the machines' own work). */
   private[graft] final case class Batch(triggerMs: Long, inputRows: Long, stateRows: Long,
-      sstBytes: Long)
+      sstBytes: Long, stateCommitMs: Long, stateUpdateMs: Long)
 
   /** One query of a drain: records pushed, wall time, every micro-batch. */
   private[graft] final case class Phase(events: Long, wallSec: Double, batches: Seq[Batch])
@@ -76,8 +78,9 @@ object StreamBench {
 
   private val Shards = 8
   // Admission sized so a micro-batch is SECONDS of work, not sub-second:
-  // each trigger pays a fixed floor (planning + one RocksDB commit per
-  // state partition), so tiny batches measure the floor, not the path.
+  // each trigger pays a fixed floor (planning + checkpoint file writes:
+  // the offset and commit logs plus one changelog per state partition),
+  // so tiny batches measure the floor, not the path.
   // Measured at sf0.1 (200k events, standalone cold-JVM; the in-bench
   // number runs JIT-warm and reads ~25% higher): 12.5k/trigger →
   // 15.7k ev/s, 50k → 32.9k (4 batches, avg 1.2s), 100k → 36.6k,
@@ -89,7 +92,13 @@ object StreamBench {
   private val MaxPerTrigger = 50000L
 
   // State-partition count: each is one RocksDB instance with a fixed
-  // per-batch commit cost. Measured at sf0.1, 50k trigger: 4 partitions
+  // per-batch commit cost. On a local checkpoint that cost is file
+  // operations, not RocksDB: `commitTimeMs` ≈ `rocksdbCommitFileSyncLatencyMs`,
+  // the close and rename of the partition's changelog file. While Hadoop
+  // forked `chmod` per created file and `readlink` per rename that was
+  // ~430 ms per batch over 4 partitions (perfbench live-handover, traced);
+  // `Tables.configure`'s local filesystem does both in-process (~40 ms).
+  // Measured with the forks, at sf0.1, 50k trigger: 4 partitions
   // → 31.4k ev/s, 8 → 32.9k, 16 → 25.9k (commit floor × instances
   // dominates past the key-space parallelism). 8 is the knee for the
   // fixture's ~20k keys.
@@ -150,7 +159,8 @@ object StreamBench {
         ops.map(_.numRowsTotal).sum,
         ops.flatMap(_.customMetrics.asScala.collect {
           case (k, v) if SstKey.matches(k.toLowerCase) => v.longValue
-        }).sum)
+        }).sum,
+        ops.map(_.commitTimeMs).sum, ops.map(_.allUpdatesTimeMs).sum)
     }
   }
 

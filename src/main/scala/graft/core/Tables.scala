@@ -132,9 +132,22 @@ object Tables {
     * `SPARK_GRAFT_MAX_PARTITION_BYTES=128m` (or unset via sessions built
     * without this helper) — the override exists precisely because 1 MB
     * splits on a 128 GB table would mean ~128k tasks of pure scheduling
-    * overhead. */
+    * overhead.
+    *
+    * `file:` paths go through graft's local filesystem
+    * ([[NoForkRawLocalFileSystem]]) on both Hadoop filesystem APIs:
+    * Hadoop's own, except that it sets permissions and tells a symlink
+    * apart in-process instead of forking `chmod` per created file and
+    * `readlink` per rename. Those forks were most of a live micro-batch's
+    * checkpoint cost (offset log, commit log, one RocksDB changelog per
+    * state partition). Everything else — reads, writes, listing,
+    * checksums, real symlinks, the sticky bit — is still Hadoop's code;
+    * other schemes are untouched; a session built without this helper
+    * keeps Hadoop's forking classes. */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
-    b.config("spark.sql.extensions", "graft.GraftExtensions")
+    b.config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.shuffle.partitions", cpus)

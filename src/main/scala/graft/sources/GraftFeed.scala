@@ -355,14 +355,14 @@ class GraftFeedStream(shards: Seq[String], sharded: Boolean, retention: Long,
     (p: InputPartition) => {
       val gp = p.asInstanceOf[GraftFeedPartition]
       val rows = gp.batch.value(gp.feed)
+      // one partition reads one shard: its name is the same on every row
+      val shard = if (gp.emitShard) UTF8String.fromString(gp.feed) else null
       new PartitionReader[InternalRow] {
         private var i = -1
         override def next(): Boolean = { i += 1; i < rows.length }
         override def get(): InternalRow = {
           val r = rows(i)
-          if (gp.emitShard)
-            InternalRow(r.tsUs, UTF8String.fromString(r.value), r.seq,
-              UTF8String.fromString(gp.feed))
+          if (shard != null) InternalRow(r.tsUs, UTF8String.fromString(r.value), r.seq, shard)
           else InternalRow(r.tsUs, UTF8String.fromString(r.value), r.seq)
         }
         override def close(): Unit = ()

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream,
+  InputStream, ObjectInputStream, ObjectOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 import scala.collection.mutable
@@ -46,11 +48,15 @@ import scala.collection.mutable
   * bounded by the micro-batch; disorder beyond it degrades to reference
   * semantics rather than silently rewinding the clock.
   *
-  * State layout: the machine object (arbitrary user fields, like the
-  * reference's callback objects) + pending timer tags, java-serialized
-  * into one binary ValueState per key (RocksDB provider required by
-  * transformWithState; see `Tables.configure`-style session setup in
-  * tests).
+  * State layout: one binary ValueState per key (RocksDB provider
+  * required by transformWithState; see `Tables.configure`-style session
+  * setup in tests), read once per key per batch. The blob ([[encode]])
+  * is a layout byte that no Java serialization stream starts with, the
+  * clock floor, the pending `(due µs, tag)` timers written with
+  * `DataOutput` (UTF-8 tags, length-prefixed), then the machine object
+  * alone (arbitrary user fields, like the reference's callback objects)
+  * java-serialized. Blobs of the earlier layouts — one java-serialized
+  * tuple, starting `0xAC 0xED` — still restore ([[decode]]).
   *
   * State evolution across redeploys (a restarted checkpoint meets NEW
   * code — contract pinned by StateEvolutionSpec): machine classes MUST
@@ -65,17 +71,67 @@ import scala.collection.mutable
   */
 object AspStream {
 
-  private def ser(m: Any): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val oos = new ObjectOutputStream(bos)
-    oos.writeObject(m); oos.close(); bos.toByteArray
+  /** Pending timers as persisted: due-µs → tags (FIFO within a due).
+    * Full µs precision — the store timer is registered at ceil-ms
+    * separately (see `Processor.storeMs`). */
+  private[streaming] type Pending = Vector[(Long, String)]
+
+  /** First byte of the current state blob. A Java serialization stream
+    * starts with `0xAC`, so a legacy blob is never read as this layout. */
+  private val Layout: Byte = 1
+
+  /** One key's state blob: [[Layout]], the clock floor, the pending
+    * `(due µs, tag)` timers in schedule order, then the machine
+    * java-serialized on its own, so its `serialVersionUID`, added-field
+    * and `readResolve` evolution rules are java serialization's. */
+  private[streaming] def encode(machine: AnyRef, pending: Pending,
+                                lastEventUs: Long): Array[Byte] = {
+    val bos = new ByteArrayOutputStream(256)
+    val out = new DataOutputStream(bos)
+    out.writeByte(Layout)
+    out.writeLong(lastEventUs)
+    out.writeInt(pending.size)
+    pending.foreach { case (dueUs, tag) =>
+      val b = tag.getBytes(UTF_8)
+      out.writeLong(dueUs); out.writeInt(b.length); out.write(b)
+    }
+    val oos = new ObjectOutputStream(out)
+    oos.writeObject(machine); oos.close()
+    bos.toByteArray
   }
-  private def deser(b: Array[Byte]): Any = {
-    val ois = new ObjectInputStream(new ByteArrayInputStream(b)) {
+
+  /** (machine, pending µs timers, clock floor) of a blob of any layout.
+    * Before [[Layout]], a blob was one java-serialized tuple versioned by
+    * its arity: (machine, pending) is the oldest (no clock floor, ms
+    * dues); (machine, pending, lastEventUs) the pre-µs one (ms dues);
+    * (machine, pending, lastEventUs, versionTag) had µs dues. Legacy
+    * dues are scaled to µs. */
+  private[streaming] def decode(b: Array[Byte]): (AnyRef, Pending, Long) =
+    if (b(0) == Layout) {
+      val in = new DataInputStream(new ByteArrayInputStream(b, 1, b.length - 1))
+      val lastEventUs = in.readLong()
+      val pending = Vector.fill(in.readInt()) {
+        val dueUs = in.readLong()
+        val tag = new Array[Byte](in.readInt())
+        in.readFully(tag)
+        (dueUs, new String(tag, UTF_8))
+      }
+      (readObject(in), pending, lastEventUs)
+    } else {
+      def us(p: Any) = p.asInstanceOf[Pending].map { case (ms, tag) => (ms * 1000, tag) }
+      readObject(new ByteArrayInputStream(b)) match {
+        case (m: AnyRef, p, last, _) => (m, p.asInstanceOf[Pending], last.asInstanceOf[Long])
+        case (m: AnyRef, p, last) => (m, us(p), last.asInstanceOf[Long])
+        case (m: AnyRef, p) => (m, us(p), Long.MinValue)
+      }
+    }
+
+  private def readObject(in: InputStream): AnyRef = {
+    val ois = new ObjectInputStream(in) {
       override def resolveClass(desc: java.io.ObjectStreamClass): Class[_] =
         Class.forName(desc.getName, false, Thread.currentThread.getContextClassLoader)
     }
-    val r = ois.readObject(); ois.close(); r
+    try ois.readObject() finally ois.close()
   }
 
   final class Processor[K, I, O](factory: K => KeyedStateMachine[K, I, O],
@@ -87,11 +143,6 @@ object AspStream {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       blob = getHandle.getValueState[Array[Byte]]("aspMachine", Encoders.BINARY, TTLConfig.NONE)
-
-    /** Pending timers as persisted: due-µs → tags (FIFO within a due).
-      * Full µs precision — the store timer is registered at ceil-ms
-      * separately (see [[storeMs]]). */
-    private type Pending = Vector[(Long, String)]
 
     /** Store-timer registration granularity: round the µs due UP to ms
       * so the watermark push path fires at-or-after the true due, never
@@ -123,29 +174,13 @@ object AspStream {
       * keeps virtual time monotone across micro-batches. */
     private def load(key: K, t0: Long): (KeyedStateMachine[K, I, O], Set[Long], ReplayCtx[O], Long) = {
       val ctx = new ReplayCtx[O](t0)
-      if (blob.exists()) {
-        // blob layout is versioned by tuple arity: (machine, pending)
-        // is the oldest (no clock floor, ms dues); (machine, pending,
-        // lastEventUs) is the pre-µs layout (ms dues); current is
-        // (machine, pending, lastEventUs, versionTag) with µs dues.
-        // Legacy blobs restore (scaled to µs) instead of throwing.
-        val (m, p, lastUs) = deser(blob.get()) match {
-          case (m, p, last, _) =>
-            (m.asInstanceOf[KeyedStateMachine[K, I, O]],
-              p.asInstanceOf[Pending], last.asInstanceOf[Long])
-          case (m, p, last) =>
-            (m.asInstanceOf[KeyedStateMachine[K, I, O]],
-              p.asInstanceOf[Pending].map { case (ms, tag) => (ms * 1000, tag) },
-              last.asInstanceOf[Long])
-          case (m, p) =>
-            (m.asInstanceOf[KeyedStateMachine[K, I, O]],
-              p.asInstanceOf[Pending].map { case (ms, tag) => (ms * 1000, tag) },
-              Long.MinValue)
-        }
+      val stored = blob.get() // one store read; null for a new key
+      if (stored != null) {
+        val (m, p, lastUs) = decode(stored)
         p.foreach { case (dueUs, tag) => ctx.callAt(dueUs, tag) }
         val reg = p.map(x => storeMs(x._1)).toSet ++
           evictDueMs(lastActivity(lastUs, p))
-        (m, reg, ctx, lastUs)
+        (m.asInstanceOf[KeyedStateMachine[K, I, O]], reg, ctx, lastUs)
       } else {
         val m = factory(key)
         m.onStart(key, ctx)
@@ -167,7 +202,7 @@ object AspStream {
         evictDueMs(lastActivity(lastEventUs, p))
       (dues diff registered).foreach(getHandle.registerTimer)
       (registered diff dues).foreach(getHandle.deleteTimer)
-      blob.update(ser((m, p, lastEventUs, 1L)))
+      blob.update(encode(m, p, lastEventUs))
     }
 
     /** Fire every pending timer with due ≤ `upTo`; returns the last

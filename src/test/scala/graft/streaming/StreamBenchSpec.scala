@@ -104,4 +104,14 @@ class StreamBenchSpec extends AnyFunSuite {
     assert(d.phases(1).batches.exists(b => b.inputRows > 0 && b.stateRows > 0),
       s"restart progress ${d.phases(1).batches}")
   }
+
+  test("drain: input batches report their state commit and state update ms") {
+    val d = graft.StreamBench.asOfDrain(spark, "spec-state-layers", ticks(1000L), batchTicks(1000L),
+      maxPerTrigger = 200L)
+    assert(d.parity)
+    val input = d.phases.head.batches.filter(_.inputRows > 0)
+    assert(input.size == 5, s"input batches $input")
+    assert(input.exists(_.stateCommitMs > 0), s"no input batch set its state commit ms: $input")
+    assert(input.exists(_.stateUpdateMs > 0), s"no input batch set its state update ms: $input")
+  }
 }
