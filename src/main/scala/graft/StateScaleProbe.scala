@@ -12,7 +12,8 @@ import graft.streaming.Machines
   * value-state row per key, changelog checkpointing) and measures:
   *
   *  - drain throughput and per-batch latency at that key count, with
-  *    the per-batch state commit and state update ms beside it;
+  *    the per-batch query planning, state commit and state update ms
+  *    beside it;
   *  - RocksDB footprint (state rows, SST bytes) from the progress
   *    metrics — the driver never holds the keys;
   *  - RESTART recovery: a second query on the SAME checkpoint (new
@@ -21,6 +22,9 @@ import graft.streaming.Machines
   *    is that reload cost, the number a production restart pays;
   *  - `parity` of both queries' output with `Replay.run` of the same
   *    ticks, required on every cardinality run.
+  *
+  * One untimed warm-up drain (the smallest key count, `WarmupEvents`
+  * ticks) runs first, so no key count is measured on a cold JVM.
   *
   *   SPARK_GRAFT_STATE_OUT=STATESCALE_r07.json \
   *     sbt "runMain graft.StateScaleProbe"
@@ -33,6 +37,7 @@ object StateScaleProbe {
   private val StepUs = 50L // event time between ticks
   private val MaxPerTrigger = 100000L
   private val RestartEvents = 100000L
+  private val WarmupEvents = 100000L // one full trigger
   private val ChurnTtlUs = 5000000L
   private val Changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
@@ -61,6 +66,9 @@ object StateScaleProbe {
     val spark = graft.core.Tables.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // untimed warm-up: without it the first (smallest) key count alone
+    // pays JIT and first-query costs, which bends the curve's low end
+    drainChecked(spark, keyCounts.min, WarmupEvents, changelog, 0L)
     val rows = keyCounts.map(k => runOne(spark, k, events, changelog))
     // churn mode (VERDICT r7 #3): every event a NEW key — the unbounded
     // key space that makes eternal state an OOM — with idle-TTL eviction
@@ -78,8 +86,11 @@ object StateScaleProbe {
     println(body)
   }
 
-  private def runOne(spark: SparkSession, keys: Long, events: Long,
-                     changelog: String, churnTtlUs: Long = 0L): String = {
+  /** [[StreamBench.asOfDrain]] of `events` ticks over `keys` keys, then a
+    * restart on the same checkpoint, with the output-row count checked
+    * and, without TTL eviction, parity with batch replay required. */
+  private def drainChecked(spark: SparkSession, keys: Long, events: Long,
+                           changelog: String, churnTtlUs: Long): StreamBench.Drain = {
     import spark.implicits._
     val total = events + RestartEvents
     // phase 1 drains `events` ticks, building K state entries; phase 2
@@ -104,6 +115,12 @@ object StateScaleProbe {
     // AspStream.run scaladoc), so churn reports parity without gating on it
     if (churnTtlUs == 0) require(d.parity,
       s"state-scale K=$keys live output ${d.stream} != batch replay ${d.expected}")
+    d
+  }
+
+  private def runOne(spark: SparkSession, keys: Long, events: Long,
+                     changelog: String, churnTtlUs: Long = 0L): String = {
+    val d = drainChecked(spark, keys, events, changelog, churnTtlUs)
     val Seq(drain, restart) = d.phases
     val batches = drain.batches.filter(_.inputRows > 0)
 
@@ -132,6 +149,7 @@ object StateScaleProbe {
       s""""drain_sec":${fmt(drain.wallSec)},"events_per_sec":${(events / drain.wallSec).round},""" +
       s""""batches":${batches.size},""" +
       s""""avg_batch_ms":${avgOf(_.triggerMs)},""" +
+      s""""avg_query_planning_ms":${avgOf(_.planningMs)},""" +
       s""""avg_state_commit_ms":${avgOf(_.stateCommitMs)},""" +
       s""""avg_state_update_ms":${avgOf(_.stateUpdateMs)},""" +
       s""""max_batch_ms":${maxOf(_.triggerMs)},""" +

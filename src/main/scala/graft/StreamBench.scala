@@ -45,12 +45,13 @@ object StreamBench {
                           batches: Int, batchAvgMs: Long, batchMaxMs: Long,
                           parity: Boolean)
 
-  /** One micro-batch's progress: trigger ms, input rows, and summed over
+  /** One micro-batch's progress: trigger ms, input rows, query planning
+    * ms (where the feed's per-batch broadcast is built), and summed over
     * every stateful operator the state rows, RocksDB SST file bytes, the
     * state commit ms (`commitTimeMs`) and the ms spent updating state
     * (`allUpdatesTimeMs`, which includes the machines' own work). */
-  private[graft] final case class Batch(triggerMs: Long, inputRows: Long, stateRows: Long,
-      sstBytes: Long, stateCommitMs: Long, stateUpdateMs: Long)
+  private[graft] final case class Batch(triggerMs: Long, inputRows: Long, planningMs: Long,
+      stateRows: Long, sstBytes: Long, stateCommitMs: Long, stateUpdateMs: Long)
 
   /** One query of a drain: records pushed, wall time, every micro-batch. */
   private[graft] final case class Phase(events: Long, wallSec: Double, batches: Seq[Batch])
@@ -80,7 +81,13 @@ object StreamBench {
   // Admission sized so a micro-batch is SECONDS of work, not sub-second:
   // each trigger pays a fixed floor (planning + checkpoint file writes:
   // the offset and commit logs plus one changelog per state partition),
-  // so tiny batches measure the floor, not the path.
+  // so tiny batches measure the floor, not the path. The figures below
+  // were taken while planning also built the feed's broadcast of every
+  // record as Java-serialized objects, four times per batch (Spark plans
+  // a DSv2 scan's partitions four times; `GraftFeedStream` now plans
+  // each range once and ships packed bytes, which took perfbench
+  // live-handover's mean planning per batch from ~80 to ~35–42 ms on
+  // 4 cores), so the floor is now lower than they imply.
   // Measured at sf0.1 (200k events, standalone cold-JVM; the in-bench
   // number runs JIT-warm and reads ~25% higher): 12.5k/trigger →
   // 15.7k ev/s, 50k → 32.9k (4 batches, avg 1.2s), 100k → 36.6k,
@@ -156,6 +163,7 @@ object StreamBench {
     ps.map { p =>
       val ops = p.stateOperators.toSeq
       Batch(p.durationMs.getOrDefault("triggerExecution", 0L).toLong, p.numInputRows,
+        p.durationMs.getOrDefault("queryPlanning", 0L).toLong,
         ops.map(_.numRowsTotal).sum,
         ops.flatMap(_.customMetrics.asScala.collect {
           case (k, v) if SstKey.matches(k.toLowerCase) => v.longValue

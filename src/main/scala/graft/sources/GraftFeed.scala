@@ -63,6 +63,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * implements `SupportsTriggerAvailableNow`: `Trigger.AvailableNow`
   * freezes the drain target at query start and backfills it in bounded
   * batches — [[graft.streaming.Crossover]]'s replay phase at scale.
+  *
+  * Handoff to executors: a micro-batch's offset range is planned once
+  * (Spark asks `planInputPartitions` four times per batch; repeats of
+  * the same range reuse the first answer) into ONE broadcast holding
+  * each advanced shard's records as a packed byte array (`pack`:
+  * `tsUs`, `seq`, UTF-8 length, UTF-8 bytes per record). The reader
+  * walks that array and takes each value as a `UTF8String` view of its
+  * bytes. See [[GraftFeedStream]]'s `currentBatch` for why both.
   */
 object GraftFeed {
   final case class Rec(tsUs: Long, value: String, seq: Long)
@@ -120,6 +128,59 @@ object GraftFeed {
   /** Records currently held in memory (test hook for retention bounds). */
   private[sources] def retained(name: String): Int =
     { val f = feed(name); f.synchronized(f.buf.length) }
+
+  /** Bytes of a packed record before its value: tsUs, seq, value length. */
+  private val PackedHeader = 8 + 8 + 4
+  /** The largest byte array the JVM allocates. */
+  private val MaxPacked = Int.MaxValue - 8
+
+  /** One shard's records of a micro-batch as the bytes its broadcast
+    * ships: per record, in seq order, `tsUs` (8 bytes), `seq` (8), the
+    * value's UTF-8 byte length (4) and those bytes, big-endian
+    * ([[java.nio.ByteBuffer]]'s order on every JVM of a cluster). */
+  private[sources] def pack(shard: String, recs: Array[Rec]): Array[Byte] = {
+    val utf8 = recs.map(_.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val buf = java.nio.ByteBuffer.allocate(
+      packedSize(shard, recs.length, utf8.foldLeft(0L)(_ + _.length)))
+    var i = 0
+    while (i < recs.length) {
+      buf.putLong(recs(i).tsUs).putLong(recs(i).seq).putInt(utf8(i).length).put(utf8(i))
+      i += 1
+    }
+    buf.array()
+  }
+
+  /** Packed size of `records` records whose values hold `valueBytes`
+    * UTF-8 bytes in all; fails rather than wrap past one array's size. */
+  private[sources] def packedSize(shard: String, records: Int, valueBytes: Long): Int = {
+    val size = records.toLong * PackedHeader + valueBytes
+    if (size > MaxPacked)
+      throw new IllegalStateException(
+        s"graft-feed shard '$shard': $records records pack to $size bytes, over the " +
+          s"$MaxPacked-byte limit of one micro-batch shard; lower maxPerTrigger")
+    size.toInt
+  }
+
+  /** Reads back what `pack` wrote, one row of `schema` per record, or
+    * of `shardedSchema` when `shard` is non-null. Each value is a view
+    * of `packed`'s bytes, not a copy. */
+  private[sources] final class PackedReader(packed: Array[Byte], shard: UTF8String)
+      extends PartitionReader[InternalRow] {
+    private val buf = java.nio.ByteBuffer.wrap(packed)
+    private var row: InternalRow = _
+    override def next(): Boolean = buf.hasRemaining && {
+      val tsUs = buf.getLong()
+      val seq = buf.getLong()
+      val len = buf.getInt()
+      val value = UTF8String.fromBytes(packed, buf.position(), len)
+      buf.position(buf.position() + len)
+      row = if (shard != null) InternalRow(tsUs, value, seq, shard)
+        else InternalRow(tsUs, value, seq)
+      true
+    }
+    override def get(): InternalRow = row
+    override def close(): Unit = ()
+  }
 
   /** Test hook. */
   def clear(name: String): Unit = {
@@ -316,8 +377,11 @@ class GraftFeedStream(shards: Seq[String], sharded: Boolean, retention: Long,
         GraftFeed.trimTo(name, math.max(0L, c - retention))
       }
 
-  override def stop(): Unit =
+  override def stop(): Unit = synchronized {
     if (currentBatch != null) { currentBatch.unpersist(blocking = false); currentBatch = null }
+    plannedRange = null
+    plannedParts = null
+  }
 
   /** The feed singleton lives in the DRIVER JVM only, so each batch's
     * record ranges are resolved HERE (driver-side planning) and shipped
@@ -331,46 +395,63 @@ class GraftFeedStream(shards: Seq[String], sharded: Boolean, retention: Long,
     * (DataSourceRDD serializes its partition list into the stage RDD),
     * tripping the >1000 KiB task-binary gate at a 50k trigger — a
     * proper broadcast ships a tiny handle per task and the records
-    * once per executor. The previous batch's broadcast is released at
-    * the next planning call (micro-batches execute sequentially;
-    * unpersist, not destroy, so a stray late retry can still refetch
-    * from the driver). */
+    * once per executor.
+    *
+    * The broadcast value is one packed byte array per advanced shard
+    * (`GraftFeed.pack`), not an array of `Rec` objects: Java
+    * serialization of one object per record would be most of the
+    * driver's per-batch work, and the reader builds each value straight
+    * from the bytes instead of re-encoding a `String` per row.
+    *
+    * Planned ONCE per offset range: Spark calls `planInputPartitions`
+    * four times per micro-batch (`DataSourceV2Strategy` and
+    * `RemoveRedundantProjects` each ask their own copy of the scan node
+    * for its partitions, in both the execution plan and the plan string
+    * of the progress report). Repeating the same `(start, end)` returns
+    * the same partitions and broadcast; a range's records never change
+    * once pushed (seqs are absolute, the feed only appends), so the
+    * memo can never serve stale data. Without it every call would
+    * broadcast a fresh packed copy, and `unpersist` removes executor
+    * copies only, never the driver's (in `local` mode, every copy):
+    * each stays on the driver heap until `ContextCleaner` collects its
+    * handle, so four copies per batch would raise the heap peak. The
+    * previous range's broadcast is unpersisted when a new range is
+    * planned (micro-batches execute sequentially; unpersist, not
+    * destroy, so a stray late retry can still refetch from the driver). */
   @transient private var currentBatch
-      : org.apache.spark.broadcast.Broadcast[Map[String, Array[GraftFeed.Rec]]] = null
+      : org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]] = null
+  @transient private var plannedRange: (Offset, Offset) = null
+  @transient private var plannedParts: Array[InputPartition] = null
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftFeedOffset].counts.toMap
-    val e = end.asInstanceOf[GraftFeedOffset].counts.toMap
-    val advanced = shards.filter(n => e(n) > s(n))
-    val data = advanced.map(n => n -> GraftFeed.range(n, s(n), e(n))).toMap
-    if (currentBatch != null) currentBatch.unpersist(blocking = false)
-    currentBatch = org.apache.spark.sql.SparkSession.active
-      .sparkContext.broadcast(data)
-    advanced.iterator // one advanced shard = one partition
-      .map(n => GraftFeedPartition(n, currentBatch, sharded): InputPartition)
-      .toArray
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = synchronized {
+    if (plannedRange != (start, end)) {
+      val s = start.asInstanceOf[GraftFeedOffset].counts.toMap
+      val e = end.asInstanceOf[GraftFeedOffset].counts.toMap
+      val advanced = shards.filter(n => e(n) > s(n))
+      val data = advanced.map(n => n -> GraftFeed.pack(n, GraftFeed.range(n, s(n), e(n)))).toMap
+      if (currentBatch != null) currentBatch.unpersist(blocking = false)
+      currentBatch = org.apache.spark.sql.SparkSession.active
+        .sparkContext.broadcast(data)
+      plannedParts = advanced.iterator // one advanced shard = one partition
+        .map(n => GraftFeedPartition(n, currentBatch, sharded): InputPartition)
+        .toArray
+      plannedRange = (start, end)
+    }
+    plannedParts
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     (p: InputPartition) => {
       val gp = p.asInstanceOf[GraftFeedPartition]
-      val rows = gp.batch.value(gp.feed)
       // one partition reads one shard: its name is the same on every row
-      val shard = if (gp.emitShard) UTF8String.fromString(gp.feed) else null
-      new PartitionReader[InternalRow] {
-        private var i = -1
-        override def next(): Boolean = { i += 1; i < rows.length }
-        override def get(): InternalRow = {
-          val r = rows(i)
-          if (shard != null) InternalRow(r.tsUs, UTF8String.fromString(r.value), r.seq, shard)
-          else InternalRow(r.tsUs, UTF8String.fromString(r.value), r.seq)
-        }
-        override def close(): Unit = ()
-      }
+      new GraftFeed.PackedReader(gp.batch.value(gp.feed),
+        if (gp.emitShard) UTF8String.fromString(gp.feed) else null)
     }
 }
 
+/** One advanced shard of a planned range: its name and the handle of
+  * the range's broadcast, which maps each shard to its packed records. */
 final case class GraftFeedPartition(
     feed: String,
-    batch: org.apache.spark.broadcast.Broadcast[Map[String, Array[GraftFeed.Rec]]],
+    batch: org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]],
     emitShard: Boolean) extends InputPartition

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.streaming.Trigger
 import graft.TestSpark
 import graft.streaming.Crossover
@@ -211,6 +212,80 @@ class GraftFeedSpec extends AnyFunSuite {
       assert(s.reportLatestOffset().asInstanceOf[GraftFeedOffset].counts ==
         Seq(a -> 5L, b -> 4L))
     } finally { GraftFeed.clear(a); GraftFeed.clear(b) }
+  }
+
+  test("planInputPartitions: a repeated range returns the same partitions and broadcast") {
+    spark // the broadcast belongs to the active session
+    val a = "plan-a-" + System.nanoTime()
+    val b = "plan-b-" + System.nanoTime()
+    try {
+      (0 until 3).foreach(k => GraftFeed.push(a, T0 + k, s"a$k"))
+      (0 until 2).foreach(k => GraftFeed.push(b, T0 + k, s"b$k"))
+      val s = new GraftFeedStream(Seq(a, b), sharded = true, retention = Long.MaxValue)
+      def ids(ps: Array[InputPartition]) =
+        ps.map(_.asInstanceOf[GraftFeedPartition].batch.id).distinct.toSeq
+      val start = s.initialOffset()
+      val end = s.latestOffset()
+      val first = s.planInputPartitions(start, end)
+      // Spark re-plans with equal offsets, not necessarily the same objects
+      val again = s.planInputPartitions(start, s.deserializeOffset(end.json()))
+      assert(first.length == 2)
+      assert(again.sameElements(first))
+      assert(ids(first).size == 1 && ids(again) == ids(first))
+      GraftFeed.push(a, T0 + 3, "a3")
+      val later = s.planInputPartitions(start, s.latestOffset())
+      assert(ids(later).size == 1 && ids(later) != ids(first))
+      s.stop()
+    } finally { GraftFeed.clear(a); GraftFeed.clear(b) }
+  }
+
+  test("packed rows round-trip exactly: UTF-8, empty, commas, newline, pre-1970 and µs stamps") {
+    import spark.implicits._
+    val values = Seq("€ 1,5 — 日本", "", "a,b,,c", "line1\nline2", "plain", "\uD83D\uDE00 astral")
+    val stamps = Seq(-86400000001L, T0 + 1L, T0 + 999999L, -1L, 0L, T0 + 123456789L)
+    def drained[T: org.apache.spark.sql.Encoder](opts: Map[String, String], cols: String*): Seq[T] = {
+      val table = "packed_" + System.nanoTime()
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-packed-ckpt").toString
+      val q = spark.readStream.format("graft-feed").options(opts)
+        .option("maxPerTrigger", "4").load()
+        .selectExpr(cols: _*)
+        .writeStream.format("memory").queryName(table)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try assert(q.awaitTermination(60000), "AvailableNow drain did not terminate")
+      finally q.stop()
+      spark.table(table).as[T].collect().toSeq
+    }
+
+    val feed = "packed-" + System.nanoTime()
+    try {
+      stamps.zip(values).foreach { case (ts, v) => GraftFeed.push(feed, ts, v) }
+      val got = drained[(Long, String, Long)](Map("feed" -> feed), "unix_micros(ts)", "value", "seq")
+      assert(got.sortBy(_._3) == stamps.zip(values).zipWithIndex.map { case ((ts, v), i) =>
+        (ts, v, i.toLong) })
+    } finally GraftFeed.clear(feed)
+
+    val a = "packed-a-" + System.nanoTime()
+    val b = "packed-b-" + System.nanoTime()
+    try {
+      val pushed = stamps.zip(values).zipWithIndex.map { case ((ts, v), i) =>
+        val shard = if (i % 2 == 0) a else b
+        (ts, v, GraftFeed.push(shard, ts, v), shard)
+      }
+      val got = drained[(Long, String, Long, String)](Map("shards" -> s"$a,$b"),
+        "unix_micros(ts)", "value", "seq", "shard")
+      assert(got.sortBy(r => (r._4, r._3)) == pushed.sortBy(r => (r._4, r._3)))
+    } finally { GraftFeed.clear(a); GraftFeed.clear(b) }
+  }
+
+  test("packing: a shard batch past one array's size fails naming maxPerTrigger") {
+    assert(GraftFeed.packedSize("s", 2, 10L) == 2 * 20 + 10)
+    // over the limit, and past 2^32 where an Int size would wrap to 10
+    Seq(Int.MaxValue.toLong, (1L << 32) + 10L).foreach { bytes =>
+      val e = intercept[IllegalStateException](GraftFeed.packedSize("s", 3, bytes))
+      assert(e.getMessage.contains("maxPerTrigger"), e.getMessage)
+    }
   }
 
   test("sharded feed composes with Crossover: both backlogs drain before on_live_start") {

@@ -113,5 +113,6 @@ class StreamBenchSpec extends AnyFunSuite {
     assert(input.size == 5, s"input batches $input")
     assert(input.exists(_.stateCommitMs > 0), s"no input batch set its state commit ms: $input")
     assert(input.exists(_.stateUpdateMs > 0), s"no input batch set its state update ms: $input")
+    assert(input.forall(_.planningMs > 0), s"an input batch reported no query planning ms: $input")
   }
 }
