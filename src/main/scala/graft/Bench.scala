@@ -54,15 +54,12 @@ object Bench {
     // task binaries, scheduler — keep their own loggers).
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
-    // driver-egress standing gate: count (and report in the committed
-    // line) every >1000 KiB task-binary warning — the r6 AQE-bloom class
-    // must fail loudly in the artifact, not scroll by in a log tail
-    TaskBinaryGate.install()
-    // silent-degradation standing gate: count every codegen-fallback
-    // WARN — an expression that drops its stage to interpreted rows
-    // keeps all correctness gates green and must fail loudly in the
-    // artifact instead (the r8 ShingleHashes forwarder lesson)
-    CodegenGate.install()
+    // standing gates on two silent WARNs: every >1000 KiB task binary
+    // (the r6 AQE-bloom driver-egress class) and every codegen fallback
+    // (a stage quietly running interpreted rows, the r8 ShingleHashes
+    // forwarder lesson) is counted into the committed line, so neither
+    // can scroll by in a log tail
+    LogGate.install()
     // optional args = bench only these queries (isolation profiling)
     val selected =
       if (args.isEmpty) SparkEntry.queries
@@ -250,17 +247,11 @@ object Bench {
     // committed line so round-over-round claims are auditable — VERDICT
     // r6: quote committed-artifact numbers only, and make them min-of-k
     // so a one-off GC stall can't set a round's headline)
-    val binGate = s""""task_binary_warns":${TaskBinaryGate.warnCount},""" +
-      s""""task_binary_max_kib":${fmt(TaskBinaryGate.maxSeenKib)},""" +
-      s""""codegen_fallback_warns":${CodegenGate.warnCount}"""
-    if (TaskBinaryGate.warnCount > 0)
-      System.err.println(s"[bench] DRIVER-EGRESS GATE VIOLATION: " +
-        s"${TaskBinaryGate.warnCount} task binaries over 1000 KiB " +
-        s"(max ${TaskBinaryGate.maxSeenKib.round} KiB) — see task-binary-gate lines above")
-    if (CodegenGate.warnCount > 0)
-      System.err.println(s"[bench] CODEGEN GATE VIOLATION: " +
-        s"${CodegenGate.warnCount} codegen fallbacks — stages ran " +
-        s"interpreted; see codegen-gate lines above")
+    val binGate = s""""task_binary_warns":${LogGate.taskBinaryWarnCount},""" +
+      s""""task_binary_max_kib":${fmt(LogGate.taskBinaryMaxKib)},""" +
+      s""""codegen_fallback_warns":${LogGate.codegenFallbackWarns}"""
+    LogGate.violations.foreach(v => System.err.println(
+      s"[bench] LOG GATE VIOLATION: $v — see log-gate lines above"))
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","min_of_k":2,"queries":$qs,""" +
       s""""failed":${failed.size},"failed_queries":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +

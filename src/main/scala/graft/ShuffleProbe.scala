@@ -63,12 +63,10 @@ object ShuffleProbe {
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // driver-egress gate rides the whole-suite probe: ANY >1000 KiB task
-    // binary fails the run like a superlinear exchange would
-    TaskBinaryGate.install()
-    // silent-degradation gate rides it too: ANY codegen fallback
-    // (a stage quietly running interpreted rows) fails the run
-    CodegenGate.install()
+    // both log gates ride the whole-suite probe: ANY >1000 KiB task
+    // binary or codegen fallback (a stage quietly running interpreted
+    // rows) fails the run like a superlinear exchange would
+    LogGate.install()
 
     val bytes = new AtomicLong(0L)
     val records = new AtomicLong(0L)
@@ -165,9 +163,9 @@ object ShuffleProbe {
            |"allowlist":$allow,
            |"errors":${errors.map("\"" + _ + "\"").mkString("[", ",", "]")},
            |"superlinear_unallowed":${superlinear.map("\"" + _ + "\"").mkString("[", ",", "]")},
-           |"task_binary_warns":${TaskBinaryGate.warnCount},
+           |"task_binary_warns":${LogGate.taskBinaryWarnCount},
            |"task_binary_gate":"zero warnings over Spark's 1000 KiB line",
-           |"codegen_fallback_warns":${CodegenGate.warnCount},
+           |"codegen_fallback_warns":${LogGate.codegenFallbackWarns},
            |"codegen_gate":"zero 'falling back to interpreter mode' / 'Whole-stage codegen disabled' warnings",
            |"queries":[
            |${artifactRows.mkString(",\n")}
@@ -177,17 +175,10 @@ object ShuffleProbe {
       System.err.println(s"[shuffleprobe] wrote $out (${artifactRows.size} queries)")
     }
     spark.stop()
-    if (superlinear.nonEmpty || errors.nonEmpty || TaskBinaryGate.warnCount > 0 ||
-        CodegenGate.warnCount > 0) {
+    if (superlinear.nonEmpty || errors.nonEmpty || LogGate.violations.nonEmpty) {
       System.err.println(s"[shuffleprobe] SUPERLINEAR shuffle growth: ${superlinear.mkString(", ")}" +
         (if (errors.nonEmpty) s"; ERRORS: ${errors.mkString(", ")}" else "") +
-        (if (TaskBinaryGate.warnCount > 0)
-           s"; TASK BINARIES over 1000 KiB: ${TaskBinaryGate.warnCount} " +
-             s"(max ${TaskBinaryGate.maxSeenKib.round} KiB)"
-         else "") +
-        (if (CodegenGate.warnCount > 0)
-           s"; CODEGEN FALLBACKS (interpreted stages): ${CodegenGate.warnCount}"
-         else ""))
+        LogGate.violations.map("; " + _).getOrElse(""))
       sys.exit(1)
     }
   }

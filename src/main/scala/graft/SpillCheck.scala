@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.SessionShim
 
 /** Memory-pressure / SPILL gate (VERDICT r7 #2): every other gate runs
@@ -41,8 +41,8 @@ import org.apache.spark.sql.graft.SessionShim
 object SpillCheck {
 
   /** Heaviest queries by the committed bench lines + the two SQL-TVF
-    * gates (index builds ride the query). Env-overridable. */
-  private val DefaultQueries = Seq(
+    * gates (index builds ride the query). */
+  private val Queries = Seq(
     "q115_pagerank", "q134_ivfpq_trained", "q127_triangles",
     "q91_sketch_error", "q149_sql_dedup_probe", "q105_cross_corpus_dedup",
     "q139_star_banding", "q144_semdedup_survivors", "q61_neardup_banded",
@@ -53,6 +53,11 @@ object SpillCheck {
     // the TVF surface) and the classifier's score/intercept diamond
     "q168_sql_dup_cuts", "q163_quality_classifier",
     "q1_pricing_summary")
+
+  // the constrained pass: executors, their heap, force-spill row count
+  private val Master = "local-cluster[2,4,1408]"
+  private val ExecutorMem = "1g"
+  private val ForceSpillElements = "131072"
 
   private final class SpillListener extends SparkListener {
     val mem = new AtomicLong(0L)
@@ -67,26 +72,20 @@ object SpillCheck {
     def reset(): (Long, Long) = (mem.getAndSet(0L), disk.getAndSet(0L))
   }
 
-  private def fingerprint(df: DataFrame): (Long, Long) = StreamBench.fingerprint(df)
-
   private def replayFingerprint(spark: SparkSession, sfDir: String): (Long, Long) =
-    fingerprint(BenchReplayEvent.countingReplay(spark, sfDir)._2.toDF())
+    StreamBench.fingerprint(BenchReplayEvent.countingReplay(spark, sfDir)._2.toDF())
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx10")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val names = sys.env.get("SPARK_GRAFT_SPILL_QUERIES")
-      .map(_.split(",").map(_.trim).toSeq).getOrElse(DefaultQueries)
-    val forceThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_SPILL_FORCE_ELEMENTS", "131072")
 
     // ---- pass 1: reference fingerprints, roomy local session ----
     val ref = {
       val spark = graft.core.Tables.configure(
         SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
-      val fps = names.map { n =>
-        val fp = fingerprint(SparkEntry.queries(n)(spark, sfDir))
+      val fps = Queries.map { n =>
+        val fp = StreamBench.fingerprint(SparkEntry.queries(n)(spark, sfDir))
         System.err.println(s"[spill] reference $n -> $fp")
         n -> fp
       }.toMap
@@ -96,16 +95,14 @@ object SpillCheck {
     }
 
     // ---- pass 2: constrained executors + forced spill thresholds ----
-    val master = sys.env.getOrElse("SPARK_GRAFT_SPILL_MASTER", "local-cluster[2,4,1408]")
     val spark = graft.core.Tables.configure(
-        SparkSession.builder().master(master)
+        SparkSession.builder().master(Master)
           .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-          .config("spark.executor.memory",
-            sys.env.getOrElse("SPARK_GRAFT_SPILL_EXECUTOR_MEM", "1g"))
+          .config("spark.executor.memory", ExecutorMem)
           // every UnsafeExternalSorter (sort, agg fallback, shuffle
           // write) force-spills past this many rows — deterministic
           // spill exercise independent of heap luck
-          .config("spark.shuffle.spill.numElementsForceSpillThreshold", forceThreshold),
+          .config("spark.shuffle.spill.numElementsForceSpillThreshold", ForceSpillElements),
         cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -114,17 +111,17 @@ object SpillCheck {
         "spark.sql.sortMergeJoinExec.buffer.spill.threshold",
         "spark.sql.sessionWindow.buffer.spill.threshold",
         "spark.sql.cartesianProductExec.buffer.spill.threshold")
-      .foreach(k => spark.conf.set(k, forceThreshold))
+      .foreach(k => spark.conf.set(k, ForceSpillElements))
     val listener = new SpillListener
     spark.sparkContext.addSparkListener(listener)
 
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", v)
     var failures = List.empty[String]
-    val rows = names.map { n =>
+    val rows = Queries.map { n =>
       listener.reset()
       val t0 = System.nanoTime()
       val (fp, err) =
-        try (fingerprint(SparkEntry.queries(n)(spark, sfDir)), "")
+        try (StreamBench.fingerprint(SparkEntry.queries(n)(spark, sfDir)), "")
         catch { case e: Throwable => ((-1L, -1L), String.valueOf(e.getMessage).take(120)) }
       val sec = (System.nanoTime() - t0) / 1e9
       SessionShim.drainListenerBus(spark.sparkContext)
@@ -170,9 +167,8 @@ object SpillCheck {
     if (!spilled) failures ::= "no disk bytes spilled anywhere — the gate measured nothing"
     val ok = failures.isEmpty
     val line =
-      s"""{"sf":"$sfDir","master":"$master","executor_mem":"${
-        sys.env.getOrElse("SPARK_GRAFT_SPILL_EXECUTOR_MEM", "1g")}",""" +
-      s""""force_spill_elements":$forceThreshold,"queries":[${rows.mkString(",")}],""" +
+      s"""{"sf":"$sfDir","master":"$Master","executor_mem":"$ExecutorMem",""" +
+      s""""force_spill_elements":$ForceSpillElements,"queries":[${rows.mkString(",")}],""" +
       s""""replay":{"hash_ok":$replayOk,"memory_bytes_spilled":$rm,""" +
       s""""disk_bytes_spilled":$rd,"sec":${fmt(replaySec)}},""" +
       s""""stream_bounded_rocksdb_64mb_parity":$streamOk,""" +

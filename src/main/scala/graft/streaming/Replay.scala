@@ -202,10 +202,10 @@ object Replay {
     // join — a diamond. Unlike the q91/q105 sites, the DATA is not
     // checkpointed here: at 100 TB a block-manager store + reload of
     // the tagged events is strictly more I/O than the second pruned
-    // columnar scan it would save (and a 10M-row HotKeyProbe A/B of
-    // all three forms — no checkpoint, tagged checkpoint, bounds-only —
-    // measures them within run-to-run noise locally, so recompute wins
-    // on memory pressure alone). Only `bounds` is materialized, through
+    // columnar scan it would save (and a 10M-row A/B of all three
+    // forms — no checkpoint, tagged checkpoint, bounds-only — measured
+    // them within run-to-run noise locally, so recompute wins on memory
+    // pressure alone). Only `bounds` is materialized, through
     // the graft.Materialize seam: ONE stored row de-duplicates a full
     // agg pass over the source, cutting the plan's 4 source passes to 3
     // for free. Default localCheckpoint mode truncates that one-row

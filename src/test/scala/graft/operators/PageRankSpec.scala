@@ -34,4 +34,35 @@ class PageRankSpec extends AnyFunSuite {
     // tail (which accumulates the hub's flow) out-ranks the leaves
     assert(got(0L) > got(1L) && got(5L) > got(1L))
   }
+
+  test("table mode (bucketed durable round tables) ranks are bit-identical to local mode") {
+    import org.apache.spark.sql.functions.col
+    import graft.Materialize
+    // deterministic scale-free-ish digraph: 20k edges over 4k nodes
+    val edges = spark.range(0, 20000).select(
+      (col("id") % 4000).as("src"),
+      ((col("id") * 2654435761L + 17) % 4000).as("dst"))
+    def ranks(): Seq[(Long, Long)] = PageRank.run(edges, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val local = ranks()
+    // broadcast off: the round joins must take the shuffle-join path
+    // over the bucketed read-back, the layout a large graph gets
+    val keys = Seq(Materialize.ModeKey, Materialize.DirKey,
+      "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(Materialize.ModeKey, "table")
+    spark.conf.set(Materialize.DirKey,
+      java.nio.file.Files.createTempDirectory("graft-pagerank-table").toString)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val table = try ranks() finally {
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      Materialize.cleanup(spark)
+    }
+    assert(local.size == 4000 && table.size == local.size, s"${table.size} table-mode ranks")
+    val differing = local.zip(table).count { case (l, t) => l != t }
+    assert(differing == 0, s"$differing of ${local.size} ranks differ from local mode")
+  }
 }
