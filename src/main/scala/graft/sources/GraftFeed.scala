@@ -64,22 +64,51 @@ import org.apache.spark.unsafe.types.UTF8String
   * freezes the drain target at query start and backfills it in bounded
   * batches — [[graft.streaming.Crossover]]'s replay phase at scale.
   *
+  * Storage: each feed keeps its records packed in append-only byte
+  * chunks, in the layout its broadcasts ship (`tsUs`, `seq`, UTF-8
+  * length, UTF-8 bytes per record, big-endian), with no object per
+  * record: [[push]] encodes a value once, and a range is located by its
+  * chunks' first seqs and the length prefixes inside one chunk. Trim is
+  * record-exact, but memory is freed a whole chunk at a time, so a
+  * trimmed feed holds its window plus at most the partly trimmed oldest
+  * chunk and the free tail of the newest.
+  *
   * Handoff to executors: a micro-batch's offset range is planned once
   * (Spark asks `planInputPartitions` four times per batch; repeats of
   * the same range reuse the first answer) into ONE broadcast holding
-  * each advanced shard's records as a packed byte array (`pack`:
-  * `tsUs`, `seq`, UTF-8 length, UTF-8 bytes per record). The reader
-  * walks that array and takes each value as a `UTF8String` view of its
-  * bytes. See [[GraftFeedStream]]'s `currentBatch` for why both.
+  * each advanced shard's records as one packed byte array, copied
+  * straight out of its chunks. The reader walks that array and takes
+  * each value as a `UTF8String` view of its bytes. See
+  * [[GraftFeedStream]]'s `currentBatch` for why both.
   */
 object GraftFeed {
-  final case class Rec(tsUs: Long, value: String, seq: Long)
+  /** Bytes of a packed record before its value: tsUs, seq, value length. */
+  private val PackedHeader = 8 + 8 + 4
+  /** The largest byte array the JVM allocates. */
+  private val MaxPacked = Int.MaxValue - 8
+  /** The size of every chunk, except for a record that alone exceeds it. G1
+    * gives an array of half a region or more ("humongous") whole regions
+    * to itself, and 1 MiB is G1's smallest region (the size on a 3 GB
+    * heap). In a probe of 250k bench-shaped records, 1 MiB chunks, each
+    * filling two regions, retained 137 B per record, more than one object
+    * per record did (103 B); 256 KiB chunks retained 53 B. */
+  private[sources] val ChunkCap = 256 << 10
 
-  /** A feed's live window: `base` = seq of buf.head (everything below is
-    * trimmed), absolute size = base + buf.length. */
+  /** Records `first`, `first + 1`, ... packed in `bytes[0, used)`. */
+  private final class Chunk(val first: Long, capacity: Int) {
+    val bytes: java.nio.ByteBuffer = java.nio.ByteBuffer.allocate(capacity)
+    var count: Int = 0
+    def used: Int = bytes.position()
+    def end: Long = first + count
+  }
+
+  /** A feed's live window: records [`base`, `next`), held by `chunks` in
+    * seq order. The oldest chunk may still hold trimmed records below
+    * `base`; no chunk lies wholly below it. */
   private final class Feed {
     var base: Long = 0L
-    val buf: mutable.ArrayBuffer[Rec] = mutable.ArrayBuffer.empty[Rec]
+    var next: Long = 0L
+    val chunks: mutable.ArrayBuffer[Chunk] = mutable.ArrayBuffer.empty[Chunk]
   }
   private val feeds = new java.util.concurrent.ConcurrentHashMap[String, Feed]()
 
@@ -88,72 +117,106 @@ object GraftFeed {
 
   /** Producer side: append one record (thread-safe, monotone seq). */
   def push(name: String, tsUs: Long, value: String): Long = {
+    val utf8 = value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val need = PackedHeader + utf8.length
     val f = feed(name)
     f.synchronized {
-      val seq = f.base + f.buf.length
-      f.buf += Rec(tsUs, value, seq)
+      val seq = f.next
+      if (f.chunks.isEmpty || f.chunks.last.bytes.remaining < need)
+        f.chunks += new Chunk(seq, math.max(need, ChunkCap))
+      val c = f.chunks.last
+      c.bytes.putLong(tsUs).putLong(seq).putInt(utf8.length).put(utf8)
+      c.count += 1
+      f.next = seq + 1
       seq
     }
   }
 
   /** Absolute record count ever pushed (trim does not move it). */
   private[sources] def size(name: String): Long =
-    { val f = feed(name); f.synchronized(f.base + f.buf.length) }
+    { val f = feed(name); f.synchronized(f.next) }
 
-  /** Read [from, until) by absolute seq; fails fast if the range was
-    * trimmed past (increase retention — the Kafka offset-out-of-range). */
-  private[sources] def range(name: String, from: Long, until: Long): Array[Rec] = {
+  /** Chunk index and byte offset of record `seq`, for `f.base <= seq <=
+    * f.next`: the chunk is found by its first seq, the offset by walking
+    * the length prefixes inside that one chunk. */
+  private def locate(f: Feed, seq: Long): (Int, Int) = {
+    var lo = 0
+    var hi = f.chunks.length - 1
+    while (lo < hi) { // the last chunk whose first seq is <= seq
+      val mid = (lo + hi + 1) >>> 1
+      if (f.chunks(mid).first <= seq) lo = mid else hi = mid - 1
+    }
+    val c = f.chunks(lo)
+    if (seq == c.end) (lo, c.used)
+    else {
+      var pos = 0
+      var k = c.first
+      // each record's value length follows its tsUs and seq
+      while (k < seq) { pos += PackedHeader + c.bytes.getInt(pos + 16); k += 1 }
+      (lo, pos)
+    }
+  }
+
+  /** Records [from, until) of `name` as one packed byte array, the bytes
+    * its broadcast ships and [[PackedReader]] reads. Fails fast if the
+    * range was trimmed past (increase retention — the Kafka
+    * offset-out-of-range). */
+  private[sources] def packedRange(name: String, from: Long, until: Long): Array[Byte] = {
     val f = feed(name)
     f.synchronized {
       if (from < f.base)
         throw new IllegalStateException(
           s"graft-feed '$name': records [$from, ${f.base}) already trimmed " +
             s"(retention too small for this replay)")
-      f.buf.slice((from - f.base).toInt, (until - f.base).toInt).toArray
-    }
-  }
-
-  /** Drop records with seq < keepFrom (no-op if already trimmed past). */
-  private[sources] def trimTo(name: String, keepFrom: Long): Unit = {
-    val f = feed(name)
-    f.synchronized {
-      val drop = (keepFrom - f.base).toInt
-      if (drop > 0) {
-        f.buf.remove(0, math.min(drop, f.buf.length))
-        f.base = math.max(f.base, math.min(keepFrom, f.base + drop))
+      require(from <= until && until <= f.next,
+        s"graft-feed '$name': range [$from, $until) is not within [${f.base}, ${f.next})")
+      if (from == until) Array.emptyByteArray
+      else {
+        val (ci, cpos) = locate(f, from)
+        val (ei, epos) = locate(f, until)
+        def span(i: Int): (Int, Int) =
+          (if (i == ci) cpos else 0, if (i == ei) epos else f.chunks(i).used)
+        val bytes = (ci to ei).foldLeft(0L) { (n, i) => val (a, b) = span(i); n + b - a }
+        val records = until - from
+        val out = new Array[Byte](packedSize(name, records, bytes - records * PackedHeader))
+        var at = 0
+        (ci to ei).foreach { i =>
+          val (a, b) = span(i)
+          System.arraycopy(f.chunks(i).bytes.array(), a, out, at, b - a)
+          at += b - a
+        }
+        out
       }
     }
   }
 
-  /** Records currently held in memory (test hook for retention bounds). */
-  private[sources] def retained(name: String): Int =
-    { val f = feed(name); f.synchronized(f.buf.length) }
-
-  /** Bytes of a packed record before its value: tsUs, seq, value length. */
-  private val PackedHeader = 8 + 8 + 4
-  /** The largest byte array the JVM allocates. */
-  private val MaxPacked = Int.MaxValue - 8
-
-  /** One shard's records of a micro-batch as the bytes its broadcast
-    * ships: per record, in seq order, `tsUs` (8 bytes), `seq` (8), the
-    * value's UTF-8 byte length (4) and those bytes, big-endian
-    * ([[java.nio.ByteBuffer]]'s order on every JVM of a cluster). */
-  private[sources] def pack(shard: String, recs: Array[Rec]): Array[Byte] = {
-    val utf8 = recs.map(_.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val buf = java.nio.ByteBuffer.allocate(
-      packedSize(shard, recs.length, utf8.foldLeft(0L)(_ + _.length)))
-    var i = 0
-    while (i < recs.length) {
-      buf.putLong(recs(i).tsUs).putLong(recs(i).seq).putInt(utf8(i).length).put(utf8(i))
-      i += 1
+  /** Drop records with seq < keepFrom (no-op if already trimmed past;
+    * never past the next seq), and every chunk wholly below them. */
+  private[sources] def trimTo(name: String, keepFrom: Long): Unit = {
+    val f = feed(name)
+    f.synchronized {
+      f.base = math.max(f.base, math.min(keepFrom, f.next))
+      val drop = f.chunks.indexWhere(_.end > f.base)
+      f.chunks.remove(0, if (drop < 0) f.chunks.length else drop)
     }
-    buf.array()
   }
+
+  /** Records currently in the window (test hook for retention bounds). */
+  private[sources] def retained(name: String): Int =
+    { val f = feed(name); f.synchronized((f.next - f.base).toInt) }
+
+  /** Bytes the feed's chunks hold, their summed capacities (test hook). */
+  private[sources] def retainedBytes(name: String): Long =
+    { val f = feed(name); f.synchronized(f.chunks.foldLeft(0L)(_ + _.bytes.capacity)) }
+
+  /** First seq of each chunk, oldest first (test hook). */
+  private[sources] def chunkStarts(name: String): Seq[Long] =
+    { val f = feed(name); f.synchronized(f.chunks.map(_.first).toSeq) }
 
   /** Packed size of `records` records whose values hold `valueBytes`
     * UTF-8 bytes in all; fails rather than wrap past one array's size. */
-  private[sources] def packedSize(shard: String, records: Int, valueBytes: Long): Int = {
-    val size = records.toLong * PackedHeader + valueBytes
+  private[sources] def packedSize(shard: String, records: Long, valueBytes: Long): Int = {
+    val size = records * PackedHeader + valueBytes
     if (size > MaxPacked)
       throw new IllegalStateException(
         s"graft-feed shard '$shard': $records records pack to $size bytes, over the " +
@@ -161,9 +224,9 @@ object GraftFeed {
     size.toInt
   }
 
-  /** Reads back what `pack` wrote, one row of `schema` per record, or
-    * of `shardedSchema` when `shard` is non-null. Each value is a view
-    * of `packed`'s bytes, not a copy. */
+  /** Reads back a packed range, one row of `schema` per record, or of
+    * `shardedSchema` when `shard` is non-null. Each value is a view of
+    * `packed`'s bytes, not a copy. */
   private[sources] final class PackedReader(packed: Array[Byte], shard: UTF8String)
       extends PartitionReader[InternalRow] {
     private val buf = java.nio.ByteBuffer.wrap(packed)
@@ -182,9 +245,12 @@ object GraftFeed {
     override def close(): Unit = ()
   }
 
-  /** Test hook. */
+  /** Empties the feed: frees its chunks, and the next push gets seq 0.
+    * Tests, perfbench and StreamBench call it to free a feed they are
+    * done with; `feeds` keeps the name. */
   def clear(name: String): Unit = {
-    val f = feed(name); f.synchronized { f.buf.clear(); f.base = 0L }
+    val f = feed(name)
+    f.synchronized { f.chunks.clear(); f.base = 0L; f.next = 0L }
   }
 
   val schema: StructType = StructType(Seq(
@@ -397,11 +463,12 @@ class GraftFeedStream(shards: Seq[String], sharded: Boolean, retention: Long,
     * proper broadcast ships a tiny handle per task and the records
     * once per executor.
     *
-    * The broadcast value is one packed byte array per advanced shard
-    * (`GraftFeed.pack`), not an array of `Rec` objects: Java
-    * serialization of one object per record would be most of the
-    * driver's per-batch work, and the reader builds each value straight
-    * from the bytes instead of re-encoding a `String` per row.
+    * The broadcast value is one packed byte array per advanced shard,
+    * a copy of the feed's own chunk bytes (`GraftFeed.packedRange`): the
+    * feed stores records in the layout the reader walks, so planning a
+    * batch copies bytes, with no object per record to build or
+    * serialize, and the reader builds each value straight from the
+    * bytes instead of re-encoding a `String` per row.
     *
     * Planned ONCE per offset range: Spark calls `planInputPartitions`
     * four times per micro-batch (`DataSourceV2Strategy` and
@@ -428,7 +495,7 @@ class GraftFeedStream(shards: Seq[String], sharded: Boolean, retention: Long,
       val s = start.asInstanceOf[GraftFeedOffset].counts.toMap
       val e = end.asInstanceOf[GraftFeedOffset].counts.toMap
       val advanced = shards.filter(n => e(n) > s(n))
-      val data = advanced.map(n => n -> GraftFeed.pack(n, GraftFeed.range(n, s(n), e(n)))).toMap
+      val data = advanced.map(n => n -> GraftFeed.packedRange(n, s(n), e(n))).toMap
       if (currentBatch != null) currentBatch.unpersist(blocking = false)
       currentBatch = org.apache.spark.sql.SparkSession.active
         .sparkContext.broadcast(data)

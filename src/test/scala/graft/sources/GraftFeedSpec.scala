@@ -152,7 +152,7 @@ class GraftFeedSpec extends AnyFunSuite {
       assert(GraftFeed.retained(feed) <= retention + 1,
         s"retained ${GraftFeed.retained(feed)} > $retention + 1")
       // reading below the trim point is a loud error, not silence
-      val e = intercept[IllegalStateException](GraftFeed.range(feed, 0L, 5L))
+      val e = intercept[IllegalStateException](GraftFeed.packedRange(feed, 0L, 5L))
       assert(e.getMessage.contains("trimmed"))
     } finally { q.stop(); GraftFeed.clear(feed) }
   }
@@ -286,6 +286,109 @@ class GraftFeedSpec extends AnyFunSuite {
       val e = intercept[IllegalStateException](GraftFeed.packedSize("s", 3, bytes))
       assert(e.getMessage.contains("maxPerTrigger"), e.getMessage)
     }
+  }
+
+  /** The packed layout a micro-batch ships, written independently of
+    * the feed: per record `tsUs`, `seq`, UTF-8 length, UTF-8 bytes,
+    * big-endian. */
+  private def encode(recs: Seq[(Long, String, Long)]): Array[Byte] = {
+    val utf8 = recs.map(_._2.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val b = java.nio.ByteBuffer.allocate(recs.size * 20 + utf8.map(_.length).sum)
+    recs.zip(utf8).foreach { case ((ts, _, seq), u) =>
+      b.putLong(ts).putLong(seq).putInt(u.length).put(u) }
+    b.array()
+  }
+
+  /** Pushes record 0, one value over the chunk cap, then small values of
+    * every UTF-8 width until the feed has `chunks` chunks and `tail` more
+    * records; returns every pushed `(tsUs, value, seq)`. */
+  private def pushChunks(feed: String, chunks: Int, tail: Int): Vector[(Long, String, Long)] = {
+    val small = Vector[Int => String](k => s"plain $k", k => s"€ 1,5 — 日本 $k",
+      k => "\uD83D\uDE00 astral " + k, _ => "")
+    val big = "x" * (GraftFeed.ChunkCap + 1000)
+    val pushed = Vector.newBuilder[(Long, String, Long)]
+    var k = 0
+    def pushOne(): Unit = {
+      val v = if (k == 1) big else small(k % small.size)(k)
+      val ts = T0 - 5000L + k * 7L
+      pushed += ((ts, v, GraftFeed.push(feed, ts, v)))
+      k += 1
+    }
+    while (GraftFeed.chunkStarts(feed).size < chunks) pushOne()
+    (0 until tail).foreach(_ => pushOne())
+    pushed.result()
+  }
+
+  test("chunk edges are invisible: every range packs as the reference layout and reads back") {
+    val feed = "chunks-" + System.nanoTime()
+    try {
+      val pushed = pushChunks(feed, chunks = 5, tail = 3)
+      val n = pushed.size.toLong
+      assert(pushed.map(_._3) == (0L until n))
+      val starts = GraftFeed.chunkStarts(feed)
+      // the oversized value has a chunk of its own; four more edges follow
+      assert(starts.take(3) == Seq(0L, 1L, 2L) && starts.size == 5, starts)
+      val edges = starts.tail
+      val bounds = (edges.flatMap(e => Seq(e - 1, e, e + 1)) ++ Seq(0L, n)).distinct.sorted
+      for (from <- bounds; until <- bounds if from <= until) {
+        val want = pushed.slice(from.toInt, until.toInt)
+        assert(GraftFeed.packedRange(feed, from, until).sameElements(encode(want)),
+          s"bytes of [$from, $until)")
+        assert(FeedRecords(feed, from, until) == want, s"records of [$from, $until)")
+      }
+    } finally GraftFeed.clear(feed)
+  }
+
+  test("trim is record-exact and frees whole chunks; clear restarts at seq 0") {
+    val feed = "trim-" + System.nanoTime()
+    try {
+      val pushed = pushChunks(feed, chunks = 5, tail = 40)
+      val n = pushed.size.toLong
+      val starts = GraftFeed.chunkStarts(feed)
+      val mid = (starts(3) + starts(4)) / 2
+      GraftFeed.trimTo(feed, mid)
+      assert(GraftFeed.retained(feed) == n - mid)
+      // the chunks wholly below the trim point (the oversized one among
+      // them) are freed; the one it cuts through stays
+      assert(GraftFeed.chunkStarts(feed) == starts.drop(3))
+      // besides the window, the chunks hold the trimmed head of the oldest
+      // (under one chunk) and the unwritten tail of the newest, which is
+      // room for the next pushes, not trimmed records
+      val window = encode(pushed.drop(mid.toInt))
+      val newestFree = GraftFeed.ChunkCap - encode(pushed.drop(starts.last.toInt)).length
+      assert(GraftFeed.retainedBytes(feed) - newestFree <= window.length + GraftFeed.ChunkCap,
+        s"${GraftFeed.retainedBytes(feed)} bytes held for a ${window.length}-byte window")
+      val e = intercept[IllegalStateException](GraftFeed.packedRange(feed, mid - 1, n))
+      assert(e.getMessage.contains("trimmed"))
+      assert(GraftFeed.packedRange(feed, mid, n).sameElements(window))
+      assert(GraftFeed.push(feed, T0, "after trim") == n)
+      assert(GraftFeed.size(feed) == n + 1)
+      // a trim point past the head stops at the next seq: no gap
+      GraftFeed.trimTo(feed, n + 100)
+      assert(GraftFeed.retained(feed) == 0 && GraftFeed.retainedBytes(feed) == 0L)
+      assert(GraftFeed.push(feed, T0, "after full trim") == n + 1)
+      GraftFeed.clear(feed)
+      assert(GraftFeed.chunkStarts(feed).isEmpty && GraftFeed.retainedBytes(feed) == 0L)
+      assert(GraftFeed.size(feed) == 0L && GraftFeed.push(feed, T0, "fresh") == 0L)
+    } finally GraftFeed.clear(feed)
+  }
+
+  test("footprint: bench-shaped records hold at most 60 B each; an empty feed holds no chunk") {
+    val tag = System.nanoTime()
+    val shards = (0 until 8).map(i => s"foot-$i-$tag")
+    try {
+      assert(GraftFeed.chunkStarts(shards.head).isEmpty && GraftFeed.retainedBytes(shards.head) == 0L)
+      // perfbench live-handover's records: `uid,seq,kind,value` over 8 shards
+      val rnd = new java.util.SplittableRandom(41)
+      val total = 250000
+      (0 until total).foreach { i =>
+        val uid = rnd.nextInt(20000)
+        val kind = if (rnd.nextInt(5) == 0) "trade" else "quote"
+        GraftFeed.push(shards(uid % 8), T0 + i * 250L, s"$uid,$i,$kind,${rnd.nextInt(1000).toDouble}")
+      }
+      val held = shards.map(GraftFeed.retainedBytes).sum
+      assert(held <= 60L * total, f"${held.toDouble / total}%.1f B/record")
+    } finally shards.foreach(GraftFeed.clear)
   }
 
   test("sharded feed composes with Crossover: both backlogs drain before on_live_start") {

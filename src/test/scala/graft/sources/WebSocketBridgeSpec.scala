@@ -279,7 +279,7 @@ class WebSocketBridgeSpec extends AnyFunSuite {
     val bridge = WebSocketBridge.connect("127.0.0.1", server.getLocalPort, "/", feed)
     try {
       await("all messages")(GraftFeed.size(feed) == 4L)
-      val got = GraftFeed.range(feed, 0L, 4L).map(_.value).toSeq
+      val got = FeedRecords(feed, 0L, 4L).map(_._2)
       assert(got == Seq(big, frag, "", "m2:done"))
     } finally { bridge.close(); server.close(); GraftFeed.clear(feed) }
   }
