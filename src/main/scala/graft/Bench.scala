@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{Dataset, SparkSession}
+import Runner.fmt
 
 /** Input row for the replay-throughput microbench (events fixture). */
 private[graft] case class BenchReplayEvent(
@@ -43,8 +44,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Tables.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    // optional args = bench only these queries (isolation profiling)
+    val selected =
+      if (args.isEmpty) SparkEntry.queries else SparkEntry.select(args.toSeq)
+    val spark = graft.core.Tables.sessionBuilder(cpus, s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // resetSessionState() unpersists lazily-localCheckpointed RDDs of
     // FINISHED queries — the data is meant to be dropped, but each
@@ -60,10 +63,7 @@ object Bench {
     // forwarder lesson) is counted into the committed line, so neither
     // can scroll by in a log tail
     LogGate.install()
-    // optional args = bench only these queries (isolation profiling)
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => args.contains(k) }
+    val run = new Runner(spark)
     // Session-state reset between queries: localCheckpoint'd RDDs (the
     // diamond-reuse pattern in q91/q115/q127...) and cached tables stay
     // pinned for the session unless dropped, and accumulated broadcasts
@@ -74,25 +74,21 @@ object Bench {
     // breather (~100ms each) to noise while keeping pressure bounded.
     var sinceGc = 0
     def resetSessionState(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Runner.dropCached(spark)
       sinceGc += 1
       if (sinceGc >= 8) { sinceGc = 0; System.gc() }
     }
+    def timed(name: String): Run[Unit] = {
+      val r = run(Runner.noop(selected(name)(spark, sfDir)))
+      resetSessionState()
+      r
+    }
     // name -> (seconds, ok)
     def pass(): Seq[(String, Double, Boolean)] =
-      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        val secs = (System.nanoTime() - t0) / 1e9
-        resetSessionState()
-        (name, secs, ok)
+      selected.keys.toSeq.sorted.map { name =>
+        val r = timed(name)
+        r.error.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+        (name, r.secs, r.ok)
       }
     // JVM/codegen/classloading warm-up. Its cost is driver-side planning
     // + first-compile, not execution, so queries warm CONCURRENTLY
@@ -106,7 +102,7 @@ object Bench {
       selected.toSeq.sortBy(_._1).grouped(8).foreach { batch =>
         val threads = batch.map { case (name, fn) =>
           val t = new Thread(() => {
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            try Runner.noop(fn(spark, sfDir))
             catch { case e: Throwable =>
               System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
             }
@@ -144,25 +140,20 @@ object Bench {
     val isolatedReps = 5
     val isolated = movers.map { name =>
       System.gc()
-      val fn = selected(name)
-      // a transient failure here must not lose the already-measured totals
-      val best =
-        try {
-          val times = (1 to isolatedReps).map { _ =>
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val secs = (System.nanoTime() - t0) / 1e9
-            resetSessionState()
-            secs
-          }.sorted
+      // reps stop at the first failure, which reports -1 and must not
+      // lose the already-measured totals
+      val reps = LazyList.fill(isolatedReps)(timed(name))
+      val best = reps.find(!_.ok) match {
+        case Some(f) =>
+          System.err.println(s"[bench] isolated $name failed: ${f.error.get}")
+          "-1"
+        case None =>
+          val times = reps.map(_.secs).sorted
           val med =
             if (times.size % 2 == 1) times(times.size / 2)
             else (times(times.size / 2 - 1) + times(times.size / 2)) / 2
           s"""{"min":${times.head},"median":$med,"reps":$isolatedReps}"""
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] isolated $name failed: ${e.getMessage}")
-          "-1"
-        }
+      }
       "\"" + name + "\":" + best
     }.mkString("{", ",", "}")
     // Replay-engine throughput vs the reference's headline number
@@ -172,18 +163,15 @@ object Bench {
     val replayPerSec = {
       val (ev, replayed) = BenchReplayEvent.countingReplay(spark, sfDir)
       val n = ev.count()
-      def onePass(): Double = {
-        val t0 = System.nanoTime()
-        replayed.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
       // min of FOUR passes: at sf0.1 one pass is ~0.2-0.5 s, so two
       // passes still let a single scheduler hiccup set the round's
       // headline number (observed 503k vs 356k ev/s on back-to-back
       // otherwise-idle runs); four passes cost <2 s and pin the min
-      try { val secs = (1 to 4).map(_ => onePass()).min; n / secs }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] replay microbench failed: ${e.getMessage}"); -1.0
+      val passes = LazyList.fill(4)(run(Runner.noop(replayed)))
+      passes.find(!_.ok) match {
+        case Some(f) =>
+          System.err.println(s"[bench] replay microbench failed: ${f.error.get}"); -1.0
+        case None => n / passes.map(_.secs).min
       }
     }
     // LIVE streaming path (VERDICT r5 #1): the same machines under
@@ -238,9 +226,6 @@ object Bench {
     // The driver captures only the tail of stdout, so the FINAL line must
     // be compact (<~1,500 chars): totals + the slowest-10 map. The full
     // 123-query map goes to target/bench_full.json for humans/judges.
-    // Locale.ROOT: the f-interpolator is locale-dependent and a
-    // comma-decimal locale would emit invalid JSON.
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     val slowest = results.filter(_._3).sortBy(-_._2).take(10)
       .map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     // per-query times are MIN over k timed passes (k stated in the

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.SparkSession
 
 /** The local-cluster standing gate: everything else in the repo runs
   * `local[n]` — ONE JVM, shared heap — which cannot exercise the axis a
@@ -66,13 +65,7 @@ object ClusterCheck {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,4096]")
     require(master.startsWith("local-cluster"),
       s"ClusterCheck needs a local-cluster master, got $master")
-    val spark = graft.core.Tables.configure(
-        SparkSession.builder().master(master)
-          .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-          .config("spark.executor.memory",
-            sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g")),
-        cpus)
-      .getOrCreate()
+    val spark = graft.core.Tables.sessionBuilder(cpus, master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext
     // Standalone schedules as soon as ONE executor offers cores, so the
@@ -185,7 +178,6 @@ object ClusterCheck {
 
     val ok = localFailed && tableCompleted && replayOk && streamParity &&
       streamKillParity
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", v)
     val line =
       s"""{"master":"$master","executors":${execs0.size},""" +
       s""""fault_local_failed_as_expected":$localFailed,""" +

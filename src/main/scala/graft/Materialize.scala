@@ -51,10 +51,10 @@ object Materialize {
   /** Stale-sibling sweep age for `table` mode (ms). A crashed driver
     * leaves its `graft-mat-*` scratch root behind (the shutdown hook
     * never ran); the NEXT session that materializes under the same
-    * parent deletes sibling roots idle longer than this. Default 12h —
-    * long enough that a live long-running driver (which adds a child
-    * dir per reuse point, refreshing the root's mtime) is never swept. */
-  val SweepAgeKey = "spark.graft.materialize.sweepAgeMs"
+    * parent deletes sibling roots idle longer than this. 12h is long
+    * enough that a live long-running driver (which adds a child dir per
+    * reuse point, refreshing the root's mtime) is never swept. */
+  private val SweepAgeMs = 12L * 3600 * 1000
 
   // per-session scratch id + written paths (for cleanup); tiny — paths
   // only. Weak keys: a dropped session must not pin its path list.
@@ -96,13 +96,12 @@ object Materialize {
     * A crash (SIGKILL / OOM / power loss) skips shutdown hooks by
     * definition — the sweep is the backstop that keeps a shared
     * scratch parent from filling with orphan parquet trees. */
-  private def manageRoot(spark: SparkSession, root: String): Unit =
+  private def manageRoot(root: String): Unit =
     synchronized {
       if (!managedRoots.add(root)) return
       Runtime.getRuntime.addShutdownHook(
         new Thread(() => rmTree(new java.io.File(root)),
           "graft-materialize-scratch-cleanup"))
-      val sweepAge = spark.conf.get(SweepAgeKey, (12L * 3600 * 1000).toString).toLong
       val parent = new java.io.File(root).getAbsoluteFile.getParentFile
       val now = System.currentTimeMillis()
       val sibs = if (parent == null) Array.empty[java.io.File]
@@ -110,7 +109,7 @@ object Materialize {
       if (sibs != null) sibs.foreach { s =>
         if (s.getName.startsWith("graft-mat-") &&
             s.getAbsolutePath != new java.io.File(root).getAbsolutePath &&
-            now - s.lastModified() > sweepAge) {
+            now - s.lastModified() > SweepAgeMs) {
           System.err.println(s"[materialize] sweeping stale scratch ${s.getPath} " +
             s"(idle ${(now - s.lastModified()) / 60000} min)")
           rmTree(s)
@@ -200,7 +199,7 @@ object Materialize {
       case "table" =>
         val root = spark.conf.get(DirKey,
           s"${sys.props("java.io.tmpdir")}/graft-mat-${sessionTag(spark)}")
-        manageRoot(spark, root)
+        manageRoot(root)
         val id = java.util.UUID.randomUUID().toString
         // (table name, path): bucketed external table for keyed reuse
         // points (read-back keeps hashpartitioning(keys, buckets) — see

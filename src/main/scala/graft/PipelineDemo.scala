@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Runner.fmt
 
 /** The README "Running at 100 TB" pipeline as ONE runnable job —
   * ingest → compact+cluster → dedup → scrub → index → train-mix — each stage
@@ -164,8 +165,7 @@ object PipelineDemo {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft-pipeline")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = core.Tables.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = core.Tables.sessionBuilder(cpus, s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_MATERIALIZE=table runs every reuse point in the
     // durable persisted-table mode (the executor-loss-safe production
@@ -177,11 +177,10 @@ object PipelineDemo {
     }
     val stages = run(spark, srcDir, workDir)
     Materialize.cleanup(spark)
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", v)
     val js = stages.map(s =>
-        s"""{"stage":"${s.name}","secs":${fmt(s.secs)},"rows":${s.rows},"note":"${s.note}"}""")
+        s"""{"stage":"${s.name}","secs":${fmt(s.secs, 2)},"rows":${s.rows},"note":"${s.note}"}""")
       .mkString("[", ",", "]")
     spark.stop()
-    println(s"""{"pipeline":$js,"total_sec":${fmt(stages.map(_.secs).sum)},"src":"$srcDir"}""")
+    println(s"""{"pipeline":$js,"total_sec":${fmt(stages.map(_.secs).sum, 2)},"src":"$srcDir"}""")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.SparkPlan
 
@@ -170,8 +169,7 @@ object PlanGate {
     val sfDir = args.filterNot(_ == "--update").headOption
       .getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Tables.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = graft.core.Tables.sessionBuilder(cpus, s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val names = SparkEntry.queries.keys.toSeq.sorted

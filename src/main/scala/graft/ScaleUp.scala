@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-fixture generator: replicate the driver's sf tables K× with
@@ -27,8 +27,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val (src, out, k) = (args(0), args(1), args(2).toInt)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.Tables.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = graft.core.Tables.sessionBuilder(cpus, s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(df: DataFrame, per: (DataFrame, Int) => DataFrame): DataFrame =

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.SessionShim
-import java.util.concurrent.atomic.AtomicLong
+import Runner.fmt
 
 /** Shuffle-VOLUME evidence for SCALING.md: wall-time sublinearity on
   * local[32] conflates plan shape with overhead amortization, so this
@@ -47,6 +44,7 @@ object ShuffleProbe {
     val queries =
       if (args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").toSeq
+    val selected = SparkEntry.select(queries)
     val dirs = args.drop(1).toSeq.map { a =>
       val Array(d, k) = a.split(":"); (d, k.toDouble)
     }
@@ -58,8 +56,7 @@ object ShuffleProbe {
     // anyway, so the pure-exchange regime is the one whose growth rate
     // matters. EXPLICIT broadcast() hints (codebooks, eval shingles —
     // driver-sized by construction) override the threshold and stay.
-    val spark = graft.core.Tables.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
+    val spark = graft.core.Tables.sessionBuilder(cpus, s"local[$cpus]")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -67,41 +64,20 @@ object ShuffleProbe {
     // binary or codegen fallback (a stage quietly running interpreted
     // rows) fails the run like a superlinear exchange would
     LogGate.install()
+    val run = new Runner(spark)
 
-    val bytes = new AtomicLong(0L)
-    val records = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-      }
-    })
-
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     // (dir, k) -> query -> (bytes, records, secs)
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     val measured = dirs.map { case (dir, k) =>
       val per = queries.map { q =>
-        val fn = SparkEntry.queries(q)
-        SessionShim.drainListenerBus(spark.sparkContext)
-        bytes.set(0L); records.set(0L)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[shuffleprobe] $q @ $dir FAILED: ${e.getMessage}")
-            errors += s"$q@$dir"; false
-          }
-        val secs = (System.nanoTime() - t0) / 1e9
-        SessionShim.drainListenerBus(spark.sparkContext)
-        val (b, r) = (bytes.get(), records.get())
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-        q -> (if (ok) (b, r, secs) else (-1L, -1L, secs))
+        val r = run(Runner.noop(selected(q)(spark, dir)))
+        r.error.foreach { e =>
+          System.err.println(s"[shuffleprobe] $q @ $dir FAILED: $e")
+          errors += s"$q@$dir"
+        }
+        Runner.dropCached(spark)
+        q -> (if (r.ok) (r.totals.shuffleBytes, r.totals.shuffleRecords, r.secs)
+              else (-1L, -1L, r.secs))
       }.toMap
       val bJson = queries.map(q => "\"" + q + "\":" + per(q)._1).mkString("{", ",", "}")
       val rJson = queries.map(q => "\"" + q + "\":" + per(q)._2).mkString("{", ",", "}")

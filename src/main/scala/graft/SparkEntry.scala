@@ -51,6 +51,15 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allSpecs.map(q => q.name -> q.run).toMap
 
+  /** The named queries; an IllegalArgumentException naming every name
+    * that is not a query, before any of them runs. */
+  def select(names: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains).distinct
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    all.filter { case (name, _) => names.contains(name) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,9 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.SessionShim
+import Runner.fmt
 
 /** Memory-pressure / SPILL gate (VERDICT r7 #2): every other gate runs
   * executors that never spill — 4 GiB heaps over ≤11 MB tables — so the
@@ -22,8 +20,8 @@ import org.apache.spark.sql.graft.SessionShim
   *     (`spark.shuffle.spill.numElementsForceSpillThreshold` for every
   *     UnsafeExternalSorter: sorts, aggregates, shuffle writes; the
   *     SQLConf buffer thresholds for window / sort-merge-join /
-  *     session-window / cartesian buffers). Per-task
-  *     memory/diskBytesSpilled are summed per query via a listener.
+  *     session-window / cartesian buffers). Memory and disk bytes
+  *     spilled are summed per query by a [[Runner]].
   *
   * The gate asserts BOTH halves: hashes unchanged (spilling changed
   * where bytes live, never results) AND total disk bytes spilled > 0
@@ -59,33 +57,20 @@ object SpillCheck {
   private val ExecutorMem = "1g"
   private val ForceSpillElements = "131072"
 
-  private final class SpillListener extends SparkListener {
-    val mem = new AtomicLong(0L)
-    val disk = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        mem.addAndGet(m.memoryBytesSpilled)
-        disk.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def reset(): (Long, Long) = (mem.getAndSet(0L), disk.getAndSet(0L))
-  }
-
   private def replayFingerprint(spark: SparkSession, sfDir: String): (Long, Long) =
     StreamBench.fingerprint(BenchReplayEvent.countingReplay(spark, sfDir)._2.toDF())
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx10")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val queries = SparkEntry.select(Queries)
 
     // ---- pass 1: reference fingerprints, roomy local session ----
     val ref = {
-      val spark = graft.core.Tables.configure(
-        SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+      val spark = graft.core.Tables.sessionBuilder(cpus, s"local[$cpus]").getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       val fps = Queries.map { n =>
-        val fp = StreamBench.fingerprint(SparkEntry.queries(n)(spark, sfDir))
+        val fp = StreamBench.fingerprint(queries(n)(spark, sfDir))
         System.err.println(s"[spill] reference $n -> $fp")
         n -> fp
       }.toMap
@@ -95,15 +80,11 @@ object SpillCheck {
     }
 
     // ---- pass 2: constrained executors + forced spill thresholds ----
-    val spark = graft.core.Tables.configure(
-        SparkSession.builder().master(Master)
-          .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-          .config("spark.executor.memory", ExecutorMem)
-          // every UnsafeExternalSorter (sort, agg fallback, shuffle
-          // write) force-spills past this many rows — deterministic
-          // spill exercise independent of heap luck
-          .config("spark.shuffle.spill.numElementsForceSpillThreshold", ForceSpillElements),
-        cpus)
+    val spark = graft.core.Tables.sessionBuilder(cpus, Master, ExecutorMem)
+      // every UnsafeExternalSorter (sort, agg fallback, shuffle
+      // write) force-spills past this many rows — deterministic
+      // spill exercise independent of heap luck
+      .config("spark.shuffle.spill.numElementsForceSpillThreshold", ForceSpillElements)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // operator-buffer spill thresholds (SQLConf, session-settable)
@@ -112,39 +93,25 @@ object SpillCheck {
         "spark.sql.sessionWindow.buffer.spill.threshold",
         "spark.sql.cartesianProductExec.buffer.spill.threshold")
       .foreach(k => spark.conf.set(k, ForceSpillElements))
-    val listener = new SpillListener
-    spark.sparkContext.addSparkListener(listener)
+    val run = new Runner(spark)
 
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", v)
     var failures = List.empty[String]
-    val rows = Queries.map { n =>
-      listener.reset()
-      val t0 = System.nanoTime()
-      val (fp, err) =
-        try (StreamBench.fingerprint(SparkEntry.queries(n)(spark, sfDir)), "")
-        catch { case e: Throwable => ((-1L, -1L), String.valueOf(e.getMessage).take(120)) }
-      val sec = (System.nanoTime() - t0) / 1e9
-      SessionShim.drainListenerBus(spark.sparkContext)
-      val (m, d) = listener.reset()
-      val ok = fp == ref._1(n)
-      if (!ok) failures ::= s"$n: $fp vs ${ref._1(n)} $err"
-      System.err.println(s"[spill] $n ok=$ok mem=$m disk=$d sec=${fmt(sec)}")
-      s"""{"query":"$n","hash_ok":$ok,"memory_bytes_spilled":$m,""" +
-        s""""disk_bytes_spilled":$d,"sec":${fmt(sec)}}"""
+    // one fingerprinted run under pressure, checked against its
+    // reference pass: its JSON fields and its disk bytes spilled
+    def checked(name: String, expected: (Long, Long))(fp: => (Long, Long)): (String, Long) = {
+      val r = run(fp)
+      val ok = r.result == Right(expected)
+      if (!ok) failures ::= s"$name: ${r.result.getOrElse((-1L, -1L))} vs $expected " +
+        r.error.fold("")(_.take(120))
+      val (m, d, sec) = (r.totals.memoryBytesSpilled, r.totals.diskBytesSpilled, fmt(r.secs, 2))
+      System.err.println(s"[spill] $name ok=$ok mem=$m disk=$d sec=$sec")
+      (s""""hash_ok":$ok,"memory_bytes_spilled":$m,"disk_bytes_spilled":$d,"sec":$sec""", d)
     }
-
+    val rows = Queries.map { n =>
+      checked(n, ref._1(n))(StreamBench.fingerprint(queries(n)(spark, sfDir)))
+    }
     // replay path under the same pressure
-    listener.reset()
-    val tR = System.nanoTime()
-    val (replayFp, replayErr) =
-      try (replayFingerprint(spark, sfDir), "")
-      catch { case e: Throwable => ((-1L, -1L), String.valueOf(e.getMessage).take(120)) }
-    val replaySec = (System.nanoTime() - tR) / 1e9
-    SessionShim.drainListenerBus(spark.sparkContext)
-    val (rm, rd) = listener.reset()
-    val replayOk = replayFp == ref._2
-    if (!replayOk) failures ::= s"replay: $replayFp vs ${ref._2} $replayErr"
-    System.err.println(s"[spill] replay ok=$replayOk mem=$rm disk=$rd sec=${fmt(replaySec)}")
+    val replay = checked("replay", ref._2)(replayFingerprint(spark, sfDir))
 
     // streaming point: RocksDB under a bounded native-memory cap, with
     // batch-replay parity in-session (the ClusterCheck workload shape)
@@ -162,15 +129,14 @@ object SpillCheck {
     } catch { case e: Throwable =>
       failures ::= s"stream: ${String.valueOf(e.getMessage).take(160)}"; false }
 
-    val totalDisk = rows.map(_.split("\"disk_bytes_spilled\":")(1).split(",")(0).toLong).sum + rd
-    val spilled = totalDisk > 0
-    if (!spilled) failures ::= "no disk bytes spilled anywhere — the gate measured nothing"
+    val totalDisk = (rows :+ replay).map(_._2).sum
+    if (totalDisk == 0) failures ::= "no disk bytes spilled anywhere — the gate measured nothing"
     val ok = failures.isEmpty
     val line =
       s"""{"sf":"$sfDir","master":"$Master","executor_mem":"$ExecutorMem",""" +
-      s""""force_spill_elements":$ForceSpillElements,"queries":[${rows.mkString(",")}],""" +
-      s""""replay":{"hash_ok":$replayOk,"memory_bytes_spilled":$rm,""" +
-      s""""disk_bytes_spilled":$rd,"sec":${fmt(replaySec)}},""" +
+      s""""force_spill_elements":$ForceSpillElements,"queries":[""" +
+      Queries.zip(rows).map { case (n, (fields, _)) => s"""{"query":"$n",$fields}""" }.mkString(",") +
+      s"""],"replay":{${replay._1}},""" +
       s""""stream_bounded_rocksdb_64mb_parity":$streamOk,""" +
       s""""total_disk_bytes_spilled":$totalDisk,"ok":$ok}"""
     sys.env.get("SPARK_GRAFT_SPILL_OUT").foreach { p =>

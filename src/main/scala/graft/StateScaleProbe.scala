@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.streaming.Machines
+import Runner.fmt
 
 /** State-store SCALE probe for the machine path: the knob sweeps to
   * date varied partitions and trigger size at a fixed ~20k-key fixture;
@@ -124,7 +125,6 @@ object StateScaleProbe {
     val Seq(drain, restart) = d.phases
     val batches = drain.batches.filter(_.inputRows > 0)
 
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", v)
     def maxOf(f: StreamBench.Batch => Long) = if (batches.nonEmpty) batches.map(f).max else 0L
     def avgOf(f: StreamBench.Batch => Long) = if (batches.nonEmpty) batches.map(f).sum / batches.size else 0L
     val maxStateRows = maxOf(_.stateRows)
@@ -146,7 +146,7 @@ object StateScaleProbe {
     else ""
     val line =
       s"""{$churnFields"keys":$keys,"events":$events,""" +
-      s""""drain_sec":${fmt(drain.wallSec)},"events_per_sec":${(events / drain.wallSec).round},""" +
+      s""""drain_sec":${fmt(drain.wallSec, 2)},"events_per_sec":${(events / drain.wallSec).round},""" +
       s""""batches":${batches.size},""" +
       s""""avg_batch_ms":${avgOf(_.triggerMs)},""" +
       s""""avg_query_planning_ms":${avgOf(_.planningMs)},""" +
@@ -155,7 +155,7 @@ object StateScaleProbe {
       s""""max_batch_ms":${maxOf(_.triggerMs)},""" +
       s""""state_rows":$maxStateRows,""" +
       s""""rocksdb_sst_bytes":${maxOf(_.sstBytes)},""" +
-      s""""restart_total_sec":${fmt(restart.wallSec)},""" +
+      s""""restart_total_sec":${fmt(restart.wallSec, 2)},""" +
       s""""recovery_first_batch_ms":${restart.batches.find(_.inputRows > 0).map(_.triggerMs).getOrElse(-1L)},""" +
       s""""parity":${d.parity}}"""
     System.err.println(s"[state-scale] $line")

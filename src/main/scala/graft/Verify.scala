@@ -6,16 +6,15 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated name filter for fast iteration
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    val selected =
+      args.lift(2).fold(SparkEntry.queries)(a => SparkEntry.select(a.split(",").toSeq))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[...] runs the whole dump across
     // separate executor JVMs — the cluster standing gate
     val spark = graft.core.Tables.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       System.err.println(s"[verify] running $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -39,7 +38,7 @@ object Verify {
     // fails every skipped query as "no spark output" (fresh outDir) or
     // silently re-checks stale parquet (reused outDir)
     val json = SparkEntry.oracleSql
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected.contains(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -103,36 +103,40 @@ object Tables {
     }
 
   /** Entry-point builder honoring `SPARK_GRAFT_MASTER` — the
-    * local-cluster standing gate runs Verify/ClusterCheck with e.g.
+    * local-cluster standing gate runs Verify with e.g.
     * `SPARK_GRAFT_MASTER=local-cluster[2,8,4096]`: separate executor
     * JVMs, so broadcasts/closures/task binaries/DSv2 partitions cross
     * REAL process boundaries (the regime a 1000-executor deployment
-    * runs in; local[n] shares one heap and hides serialization bugs).
-    * Under local-cluster the executors get the driver JVM's full
-    * classpath (same host) and a memory grant that fits the worker. */
-  def sessionBuilder(cpus: String): SparkSession.Builder = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    * runs in; local[n] shares one heap and hides serialization bugs). */
+  def sessionBuilder(cpus: String): SparkSession.Builder =
+    sessionBuilder(cpus, sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+
+  /** Every main's session: `master` as given, then [[configure]]. Under
+    * local-cluster the executors get the driver JVM's full classpath
+    * (same host) and `executorMemory`, a grant that fits the worker. */
+  def sessionBuilder(cpus: String, master: String,
+      executorMemory: String = sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
+      : SparkSession.Builder = {
     val b = SparkSession.builder().master(master)
     val sized =
       if (master.startsWith("local-cluster")) {
         b.config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-          .config("spark.executor.memory",
-            sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
+          .config("spark.executor.memory", executorMemory)
       } else b
     configure(sized, cpus)
   }
 
   /** Session config every entry point needs: UTC semantics, ns-parquet
-    * compatibility, fixture-scale parallelism. Input splits default to
-    * 1 MB because these entry points (Verify/Bench/specs) read the
+    * compatibility, fixture-scale parallelism. Input splits are 1 MB
+    * because these entry points (Verify/Bench/specs) read the
     * FIXTURES, whose largest table is one ~11 MB parquet file — under
     * Spark's 128 MB default that is a single scan task, 31 of 32 cores
     * idle through every scan + partial-agg stage. The rule is splits ≈ a
-    * few per core per file; for production-sized files (128 MB–1 GB) set
-    * `SPARK_GRAFT_MAX_PARTITION_BYTES=128m` (or unset via sessions built
-    * without this helper) — the override exists precisely because 1 MB
-    * splits on a 128 GB table would mean ~128k tasks of pure scheduling
-    * overhead.
+    * few per core per file. For production-sized files (128 MB–1 GB)
+    * call `spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")`:
+    * 1 MB splits on a 128 GB table would mean ~128k tasks of pure
+    * scheduling overhead. It, `openCostInBytes` and both bloom sizes
+    * below are runtime SQL confs, so a value set on the session wins.
     *
     * `file:` paths go through graft's local filesystem
     * ([[NoForkRawLocalFileSystem]]) on both Hadoop filesystem APIs:
@@ -151,10 +155,8 @@ object Tables {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "131072"))
+      .config("spark.sql.files.maxPartitionBytes", "1m")
+      .config("spark.sql.files.openCostInBytes", "131072")
       // Runtime-bloom sizing: when AQE injects a bloom semi-filter whose
       // build side has NO stats (every materialized/checkpointed reuse
       // point is an ExistingRDD scan), Spark falls back to these
@@ -166,14 +168,12 @@ object Tables {
       // so 16k items / 128k bits (a 16 KB filter, 8 bits/item ≈ 2% FPP)
       // keeps the filter effective and the task binary small; an
       // undersized bloom only raises its false-positive rate, never
-      // wrongness. At production scale raise BOTH env overrides
+      // wrongness. At production scale set BOTH confs on the session
       // together (items AND bits — ~8–10 bits per expected item; items
       // alone would spread the same 128k bits over every key and prune
       // nothing).
-      .config("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems",
-        sys.env.getOrElse("SPARK_GRAFT_BLOOM_ITEMS", "16384"))
-      .config("spark.sql.optimizer.runtime.bloomFilter.numBits",
-        sys.env.getOrElse("SPARK_GRAFT_BLOOM_BITS", "131072"))
+      .config("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems", "16384")
+      .config("spark.sql.optimizer.runtime.bloomFilter.numBits", "131072")
       // Generated-class cache (STATIC conf, Spark default 100 entries):
       // a many-query session generates far more codegen'd classes than
       // 100 — the 169-query suite evicts each query's classes between
@@ -187,9 +187,9 @@ object Tables {
       // floors unchanged. Driver-side cost only: cached classes live in
       // the driver's metaspace (bounded by entries x generated-class
       // size); any driver serving a diverse query workload wants this
-      // >> 100 regardless of cluster size.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "5000"))
+      // >> 100 regardless of cluster size. Being static, it can only be
+      // changed on the builder, before the first session starts.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
