@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream,
-  InputStream, ObjectInputStream, ObjectOutputStream}
-import java.nio.charset.StandardCharsets.UTF_8
+  EOFException, InputStream, ObjectInputStream, ObjectOutputStream}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 import scala.collection.mutable
@@ -53,21 +52,39 @@ import scala.collection.mutable
   * setup in tests), read once per key per batch. The blob ([[encode]])
   * is a layout byte that no Java serialization stream starts with, the
   * clock floor, the pending `(due µs, tag)` timers written with
-  * `DataOutput` (UTF-8 tags, length-prefixed), then the machine object
-  * alone (arbitrary user fields, like the reference's callback objects)
-  * java-serialized. Blobs of the earlier layouts — one java-serialized
-  * tuple, starting `0xAC 0xED` — still restore ([[decode]]).
+  * `DataOutput` (UTF-8 tags, length-prefixed), then the machine:
+  *  - **compact (layout 2)**, for a machine that mixes in
+  *    [[CompactState]]: the bytes its `writeState` writes, nothing else.
+  *    To restore, the query's factory builds the machine (no `onStart`)
+  *    and `readState` fills it in. Constructor parameters therefore come
+  *    from the current factory, not from the blob, and the factory runs
+  *    once per key per batch: it must be cheap and side-effect free.
+  *  - **Java (layout 1)**, for every other machine: the machine object
+  *    alone (arbitrary user fields, like the reference's callback
+  *    objects) java-serialized.
+  * Blobs of the earlier layouts — one java-serialized tuple, starting
+  * `0xAC 0xED` — still restore ([[decode]]).
   *
   * State evolution across redeploys (a restarted checkpoint meets NEW
-  * code — contract pinned by StateEvolutionSpec): machine classes MUST
-  * pin `serialVersionUID`; then ADDING a field restores old blobs with
-  * the new field at its JVM default. Removing or retyping fields, or
-  * evolving an unpinned class, fails LOUDLY at restore
-  * (`InvalidClassException`) — never silent corruption. The recommended
-  * pattern for non-trivial migrations is explicit versioned state
-  * classes: keep the old version as a tombstone whose `readResolve()`
-  * builds the current version (proven end-to-end through a checkpoint
-  * restart in the spec).
+  * code — contract pinned by StateEvolutionSpec):
+  *  - A Java-serialized machine class MUST pin `serialVersionUID`; then
+  *    ADDING a field restores old blobs with the new field at its JVM
+  *    default. Removing or retyping fields, or evolving an unpinned
+  *    class, fails LOUDLY at restore (`InvalidClassException`) — never
+  *    silent corruption. The recommended pattern for non-trivial
+  *    migrations is explicit versioned state classes: keep the old
+  *    version as a tombstone whose `readResolve()` builds the current
+  *    version (proven end-to-end through a checkpoint restart in the
+  *    spec).
+  *  - A compact machine's reader owns its evolution: it leads with its
+  *    own version byte and reads every older version.
+  *  - Switching codecs: a layout-1 blob of a machine that now opts in
+  *    restores through Java serialization (so such a class keeps the
+  *    `serialVersionUID` its earlier deploys wrote), and its next flush
+  *    writes layout 2. A layout-2 blob whose factory now builds a
+  *    machine without the codec, or whose reader leaves bytes unread or
+  *    reads past the end, fails with an `IllegalStateException` naming
+  *    the class.
   */
 object AspStream {
 
@@ -76,47 +93,55 @@ object AspStream {
     * separately (see `Processor.storeMs`). */
   private[streaming] type Pending = Vector[(Long, String)]
 
-  /** First byte of the current state blob. A Java serialization stream
-    * starts with `0xAC`, so a legacy blob is never read as this layout. */
-  private val Layout: Byte = 1
+  /** First byte of a state blob whose machine is java-serialized, and of
+    * one whose machine is [[CompactState]]. A Java serialization stream
+    * starts with `0xAC`, so a legacy blob is never read as either. */
+  private val JavaLayout: Byte = 1
+  private val CompactLayout: Byte = 2
 
-  /** One key's state blob: [[Layout]], the clock floor, the pending
-    * `(due µs, tag)` timers in schedule order, then the machine
-    * java-serialized on its own, so its `serialVersionUID`, added-field
-    * and `readResolve` evolution rules are java serialization's. */
+  /** One key's state blob: the layout byte, the clock floor, the pending
+    * `(due µs, tag)` timers in schedule order, then the machine: its own
+    * `writeState` bytes if it is [[CompactState]], else java-serialized
+    * on its own, so its `serialVersionUID`, added-field and `readResolve`
+    * evolution rules are java serialization's. */
   private[streaming] def encode(machine: AnyRef, pending: Pending,
                                 lastEventUs: Long): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(256)
+    val bos = new ByteArrayOutputStream(64)
     val out = new DataOutputStream(bos)
-    out.writeByte(Layout)
-    out.writeLong(lastEventUs)
-    out.writeInt(pending.size)
-    pending.foreach { case (dueUs, tag) =>
-      val b = tag.getBytes(UTF_8)
-      out.writeLong(dueUs); out.writeInt(b.length); out.write(b)
+    def header(layout: Byte): Unit = {
+      out.writeByte(layout)
+      out.writeLong(lastEventUs)
+      out.writeInt(pending.size)
+      pending.foreach { case (dueUs, tag) => out.writeLong(dueUs); CompactState.writeString(out, tag) }
     }
-    val oos = new ObjectOutputStream(out)
-    oos.writeObject(machine); oos.close()
+    machine match {
+      case c: CompactState => header(CompactLayout); c.writeState(out); out.flush()
+      case _ =>
+        header(JavaLayout)
+        val oos = new ObjectOutputStream(out)
+        oos.writeObject(machine); oos.close()
+    }
     bos.toByteArray
   }
 
   /** (machine, pending µs timers, clock floor) of a blob of any layout.
-    * Before [[Layout]], a blob was one java-serialized tuple versioned by
-    * its arity: (machine, pending) is the oldest (no clock floor, ms
-    * dues); (machine, pending, lastEventUs) the pre-µs one (ms dues);
-    * (machine, pending, lastEventUs, versionTag) had µs dues. Legacy
-    * dues are scaled to µs. */
-  private[streaming] def decode(b: Array[Byte]): (AnyRef, Pending, Long) =
-    if (b(0) == Layout) {
+    * A compact blob restores into `fresh`, the key's machine as its
+    * factory builds it. Before the layout byte, a blob was one
+    * java-serialized tuple versioned by its arity: (machine, pending) is
+    * the oldest (no clock floor, ms dues); (machine, pending, lastEventUs)
+    * the pre-µs one (ms dues); (machine, pending, lastEventUs, versionTag)
+    * had µs dues. Legacy dues are scaled to µs. */
+  private[streaming] def decode(b: Array[Byte], fresh: => AnyRef = noFactory): (AnyRef, Pending, Long) =
+    if (b(0) == JavaLayout || b(0) == CompactLayout) {
       val in = new DataInputStream(new ByteArrayInputStream(b, 1, b.length - 1))
       val lastEventUs = in.readLong()
-      val pending = Vector.fill(in.readInt()) {
+      val n = in.readInt()
+      val pending = if (n == 0) Vector.empty else Vector.fill(n) {
         val dueUs = in.readLong()
-        val tag = new Array[Byte](in.readInt())
-        in.readFully(tag)
-        (dueUs, new String(tag, UTF_8))
+        (dueUs, CompactState.readString(in))
       }
-      (readObject(in), pending, lastEventUs)
+      val m = if (b(0) == JavaLayout) readObject(in) else readCompact(in, fresh)
+      (m, pending, lastEventUs)
     } else {
       def us(p: Any) = p.asInstanceOf[Pending].map { case (ms, tag) => (ms * 1000, tag) }
       readObject(new ByteArrayInputStream(b)) match {
@@ -125,6 +150,25 @@ object AspStream {
         case (m: AnyRef, p) => (m, us(p), Long.MinValue)
       }
     }
+
+  private def noFactory: AnyRef =
+    throw new IllegalStateException("a compact state blob restores only through the machine factory")
+
+  /** `m` with its state read from the rest of `in`, which it must consume
+    * exactly. */
+  private def readCompact(in: DataInputStream, m: AnyRef): AnyRef = m match {
+    case c: CompactState =>
+      val size = in.available()
+      try c.readState(in)
+      catch { case e: EOFException => throw new IllegalStateException(
+        s"${m.getClass.getName}.readState read past the end of its $size state bytes", e) }
+      if (in.available() > 0) throw new IllegalStateException(
+        s"${m.getClass.getName}.readState left ${in.available()} of its $size state bytes unread")
+      m
+    case _ => throw new IllegalStateException(
+      s"a compact state blob restores through the factory, which built ${m.getClass.getName}: " +
+        "it does not mix in CompactState")
+  }
 
   private def readObject(in: InputStream): AnyRef = {
     val ois = new ObjectInputStream(in) {
@@ -168,19 +212,25 @@ object AspStream {
         Some(storeMs(activity + idleTtlUs))
       else None
 
+    /** The store timers (ms) a key holds: one per pending due, plus the
+      * idle-TTL eviction due. With no timer pending and TTL off — every
+      * key of a timer-free machine — it is empty and builds nothing. */
+    private def storeDues(p: Pending, lastUs: Long): Set[Long] =
+      if (p.isEmpty && idleTtlUs <= 0) Set.empty
+      else p.map(x => storeMs(x._1)).toSet ++ evictDueMs(lastActivity(lastUs, p))
+
     /** Load machine + seed the ctx schedule from persisted pending timers
       * (insertion order preserved → FIFO tie-breaks survive restarts).
       * Returns the persisted per-key clock floor (`lastEventUs`), which
-      * keeps virtual time monotone across micro-batches. */
+      * keeps virtual time monotone across micro-batches. A compact blob
+      * restores into a machine the factory builds (no `onStart`). */
     private def load(key: K, t0: Long): (KeyedStateMachine[K, I, O], Set[Long], ReplayCtx[O], Long) = {
       val ctx = new ReplayCtx[O](t0)
       val stored = blob.get() // one store read; null for a new key
       if (stored != null) {
-        val (m, p, lastUs) = decode(stored)
+        val (m, p, lastUs) = decode(stored, factory(key))
         p.foreach { case (dueUs, tag) => ctx.callAt(dueUs, tag) }
-        val reg = p.map(x => storeMs(x._1)).toSet ++
-          evictDueMs(lastActivity(lastUs, p))
-        (m.asInstanceOf[KeyedStateMachine[K, I, O]], reg, ctx, lastUs)
+        (m.asInstanceOf[KeyedStateMachine[K, I, O]], storeDues(p, lastUs), ctx, lastUs)
       } else {
         val m = factory(key)
         m.onStart(key, ctx)
@@ -192,16 +242,21 @@ object AspStream {
       * timers (register new ceil-ms dues, delete consumed ones). */
     private def flush(m: KeyedStateMachine[K, I, O], registered: Set[Long],
                       ctx: ReplayCtx[O], lastEventUs: Long): Unit = {
-      val pending = mutable.ArrayBuffer.empty[(Long, String)]
-      while (ctx.timers.nonEmpty) {
-        val (dueUs, _, tag) = ctx.timers.dequeue() // (due, fifo) order
-        pending += ((dueUs, tag))
+      val p: Pending =
+        if (ctx.timers.isEmpty) Vector.empty
+        else {
+          val pending = Vector.newBuilder[(Long, String)]
+          while (ctx.timers.nonEmpty) {
+            val (dueUs, _, tag) = ctx.timers.dequeue() // (due, fifo) order
+            pending += ((dueUs, tag))
+          }
+          pending.result()
+        }
+      val dues = storeDues(p, lastEventUs)
+      if (dues.nonEmpty || registered.nonEmpty) {
+        (dues diff registered).foreach(getHandle.registerTimer)
+        (registered diff dues).foreach(getHandle.deleteTimer)
       }
-      val p: Pending = pending.toVector
-      val dues = p.map(x => storeMs(x._1)).toSet ++
-        evictDueMs(lastActivity(lastEventUs, p))
-      (dues diff registered).foreach(getHandle.registerTimer)
-      (registered diff dues).foreach(getHandle.deleteTimer)
       blob.update(encode(m, p, lastEventUs))
     }
 
@@ -223,18 +278,27 @@ object AspStream {
       // trigger interval, not the stream; a pathologically hot key in a
       // huge batch pays memory here, and the mitigation is a shorter
       // trigger (smaller batches), not a reorder buffer.
-      val sorted = rows.toVector.sortBy(r => (ts(r), tie(r)))
-      if (sorted.isEmpty) return Iterator.empty
-      val (m, registered, ctx, lastUs) = load(key, ts(sorted.head))
-      sorted.foreach { row =>
+      val buf = rows.to(mutable.ArrayBuffer)
+      val n = buf.length
+      if (n == 0) return Iterator.empty
+      val t = new Array[Long](n)
+      val tb = new Array[Long](n)
+      var i = 0
+      while (i < n) { t(i) = ts(buf(i)); tb(i) = tie(buf(i)); i += 1 }
+      val order = stableOrder(t, tb)
+      val (m, registered, ctx, lastUs) = load(key, t(order(0)))
+      i = 0
+      while (i < n) {
+        val j = order(i)
         // clock is monotone across batches: a row regressing behind the
         // persisted floor is delivered LATE (its own ts, advanced clock)
         // rather than rewinding past already-fired timers — the
         // reference's no-reorder-buffer behavior (see class doc).
-        val deliverAt = math.max(ts(row), math.max(lastUs, ctx.nowMicros))
+        val deliverAt = math.max(t(j), math.max(lastUs, ctx.nowMicros))
         fireDue(m, ctx, deliverAt) // inline path: due timers precede the event
         ctx.nowMicros = deliverAt
-        m.onEvent(ts(row), row, ctx)
+        m.onEvent(t(j), buf(j), ctx)
+        i += 1
       }
       flush(m, registered, ctx, lastEventUs = ctx.nowMicros)
       ctx.drain().iterator
@@ -271,6 +335,46 @@ object AspStream {
       }
       ctx.drain().iterator
     }
+  }
+
+  /** Row indices in stable `(t, tb)` order: a full tie keeps arrival
+    * order, as `sortBy` on a `(ts, tie)` tuple did, but the merge sort
+    * compares the primitive keys and boxes nothing. Input already in
+    * order, the common case, costs one pass. */
+  private[streaming] def stableOrder(t: Array[Long], tb: Array[Long]): Array[Int] = {
+    val n = t.length
+    def lt(a: Int, b: Int): Boolean = t(a) < t(b) || (t(a) == t(b) && tb(a) < tb(b))
+    var src = new Array[Int](n)
+    var i = 0
+    var sorted = true
+    while (i < n) {
+      src(i) = i
+      if (i > 0 && lt(i, i - 1)) sorted = false
+      i += 1
+    }
+    if (sorted) return src
+    var dst = new Array[Int](n)
+    var width = 1
+    while (width < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var a = lo
+        var b = mid
+        var k = lo
+        while (k < hi) {
+          // the left run wins ties: stability
+          if (b >= hi || (a < mid && !lt(src(b), src(a)))) { dst(k) = src(a); a += 1 }
+          else { dst(k) = src(b); b += 1 }
+          k += 1
+        }
+        lo = hi
+      }
+      val swap = src; src = dst; dst = swap
+      width *= 2
+    }
+    src
   }
 
   /** Run `ds` (a streaming Dataset with an event-time watermark already

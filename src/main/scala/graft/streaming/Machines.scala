@@ -1,9 +1,18 @@
 package graft.streaming
 
+import java.io.{DataInput, DataOutput}
+import CompactState._
+
 /** The reference's example workloads as [[KeyedStateMachine]]s — each runs
   * unchanged under batch replay ([[Replay.run]]) and live streaming
   * ([[AspStream.run]]). Semantics studied from the reference (cited);
   * implementations are original Scala.
+  *
+  * Live state codecs (CodecSurfaceSpec lists each machine's): a machine
+  * whose state is plain values is [[CompactState]], its bytes led by a
+  * version byte. Such a class pins the `serialVersionUID` that Java
+  * computed for it before it opted in, so the Java-serialized blobs of
+  * earlier deploys still restore. The carts stay Java-serialized.
   */
 object Machines {
 
@@ -111,8 +120,9 @@ object Machines {
   final case class FeedbackEvent(session_id: Long, ts_us: Long, kind: String,
                                  order_id: Long, price: Double)
 
+  @SerialVersionUID(6113461156515272558L)
   final class FeedbackMachine(sessionId: Long)
-      extends KeyedStateMachine[Long, SessionSeed, FeedbackEvent] {
+      extends KeyedStateMachine[Long, SessionSeed, FeedbackEvent] with CompactState {
     private var lastId = 1L
     private var lastPrice = 100.0
     private val toExchangeUs = 300000L // 0.3 s
@@ -137,6 +147,13 @@ object Machines {
           sendOrder(ctx)
         case _ => ()
       }
+
+    def writeState(out: DataOutput): Unit = {
+      out.writeByte(1); out.writeLong(lastId); out.writeDouble(lastPrice)
+    }
+    def readState(in: DataInput): Unit = {
+      readVersion(in, this, 1); lastId = in.readLong(); lastPrice = in.readDouble()
+    }
   }
 
   // ---------- W1/W2: greeter with deferred greeting ----------
@@ -147,8 +164,9 @@ object Machines {
   final case class NameEvent(name: String, ts_us: Long, seq: Long)
   final case class Greeting(name: String, ts_us: Long, text: String)
 
+  @SerialVersionUID(-9142778293116737490L)
   final class GreeterMachine(name: String, delayUs: Long = 0L)
-      extends KeyedStateMachine[String, NameEvent, Greeting] {
+      extends KeyedStateMachine[String, NameEvent, Greeting] with CompactState {
     private var seen = false
     private var pending = List.empty[String] // FIFO texts awaiting timers
 
@@ -164,6 +182,15 @@ object Machines {
         case h :: t => pending = t; ctx.emit(Greeting(name, ts, h))
         case Nil    => ()
       }
+
+    def writeState(out: DataOutput): Unit = {
+      out.writeByte(1); out.writeBoolean(seen)
+      out.writeInt(pending.length); pending.foreach(writeString(out, _))
+    }
+    def readState(in: DataInput): Unit = {
+      readVersion(in, this, 1); seen = in.readBoolean()
+      pending = List.fill(in.readInt())(readString(in))
+    }
   }
 
   // ---------- W5/W7: streaming as-of join as keyed last-value state ----------
@@ -180,8 +207,9 @@ object Machines {
   final case class AsOfRow(user_id: Long, ts_us: Long,
                            trade_value: Double, quote_value: Option[Double])
 
+  @SerialVersionUID(-6046611777613109075L)
   final class AsOfMachine(userId: Long)
-      extends KeyedStateMachine[Long, MarketTick, AsOfRow] {
+      extends KeyedStateMachine[Long, MarketTick, AsOfRow] with CompactState {
     private var lastQuote: Option[Double] = None
     override def onEvent(ts: Long, e: MarketTick, ctx: ReplayCtx[AsOfRow]): Unit =
       e.kind match {
@@ -189,6 +217,8 @@ object Machines {
         case "trade" => ctx.emit(AsOfRow(userId, ts, e.value, lastQuote))
         case _       => ()
       }
+    def writeState(out: DataOutput): Unit = { out.writeByte(1); writeOptDouble(out, lastQuote) }
+    def readState(in: DataInput): Unit = { readVersion(in, this, 1); lastQuote = readOptDouble(in) }
   }
 
   // ---------- CEP: consecutive-sequence pattern matcher ----------
@@ -203,8 +233,9 @@ object Machines {
                                 event_type: String)
   final case class PatternMatch(user_id: Long, start_us: Long, end_us: Long)
 
+  @SerialVersionUID(-5121314604266830479L)
   final class SeqPatternMachine(userId: Long, pattern: Seq[String])
-      extends KeyedStateMachine[Long, PatternEvent, PatternMatch] {
+      extends KeyedStateMachine[Long, PatternEvent, PatternMatch] with CompactState {
     private val patternV = pattern.toVector // onEvent is the per-event hot path
     // sliding window of the last pattern.length−1 (type, ts) pairs
     private var recent = Vector.empty[(String, Long)]
@@ -224,6 +255,14 @@ object Machines {
         ctx.emit(PatternMatch(userId, window.head._2, ts))
       recent = window.takeRight(patternV.length - 1)
     }
+    def writeState(out: DataOutput): Unit = {
+      out.writeByte(1); out.writeInt(recent.length)
+      recent.foreach { case (ty, ts) => writeString(out, ty); out.writeLong(ts) }
+    }
+    def readState(in: DataInput): Unit = {
+      readVersion(in, this, 1)
+      recent = Vector.fill(in.readInt())((readString(in), in.readLong()))
+    }
   }
 
   // ---------- W7: trade/quote book with running positions + PnL ----------
@@ -241,8 +280,9 @@ object Machines {
   final case class PnlOut(instrument: Long, ts_us: Long, kind: String, // "mid" | "pnl"
                           mid: Double, pnl: Double, buy_pnl: Double, sell_pnl: Double)
 
+  @SerialVersionUID(7826055396339747767L)
   final class PnlMachine(instrument: Long)
-      extends KeyedStateMachine[Long, PnlEvent, PnlOut] {
+      extends KeyedStateMachine[Long, PnlEvent, PnlOut] with CompactState {
     private var lastBid, lastAsk = Option.empty[Double]
     private var buyQty, sellQty = 0L
     private var buyQtyPrice, sellQtyPrice = 0.0
@@ -268,6 +308,17 @@ object Machines {
           }
         case _ => ()
       }
+
+    def writeState(out: DataOutput): Unit = {
+      out.writeByte(1); writeOptDouble(out, lastBid); writeOptDouble(out, lastAsk)
+      out.writeLong(buyQty); out.writeLong(sellQty)
+      out.writeDouble(buyQtyPrice); out.writeDouble(sellQtyPrice)
+    }
+    def readState(in: DataInput): Unit = {
+      readVersion(in, this, 1); lastBid = readOptDouble(in); lastAsk = readOptDouble(in)
+      buyQty = in.readLong(); sellQty = in.readLong()
+      buyQtyPrice = in.readDouble(); sellQtyPrice = in.readDouble()
+    }
   }
 
   // ---------- W10: sliding-window VWAP sampled on a periodic timer ----------
@@ -286,9 +337,10 @@ object Machines {
                             value: Double, weight: Double)
   final case class VwapSample(series_id: Long, ts_us: Long, vwap: Double, cum_volume: Double)
 
+  @SerialVersionUID(4128756437510229238L)
   final class VwapMachine(seriesId: Long, intervalUs: Long, stepUs: Long,
                           startUs: Long, endUs: Long)
-      extends KeyedStateMachine[Long, PriceVol, VwapSample] {
+      extends KeyedStateMachine[Long, PriceVol, VwapSample] with CompactState {
     private var buf = Vector.empty[(Long, Double, Double)] // (ts, value, weight)
     private var cumVolume = 0.0
 
@@ -309,6 +361,15 @@ object Machines {
       }
       if (ts + stepUs <= endUs) ctx.callAt(ts + stepUs, "sample")
     }
+
+    def writeState(out: DataOutput): Unit = {
+      out.writeByte(1); out.writeDouble(cumVolume); out.writeInt(buf.length)
+      buf.foreach { case (ts, v, w) => out.writeLong(ts); out.writeDouble(v); out.writeDouble(w) }
+    }
+    def readState(in: DataInput): Unit = {
+      readVersion(in, this, 1); cumVolume = in.readDouble()
+      buf = Vector.fill(in.readInt())((in.readLong(), in.readDouble(), in.readDouble()))
+    }
   }
 
   // ---------- P6: periodic timer ----------
@@ -319,8 +380,9 @@ object Machines {
   final case class TimerSeed(timer_id: Long, ts_us: Long, seq: Long)
   final case class Tick(timer_id: Long, ts_us: Long, n: Long)
 
+  @SerialVersionUID(-1233030308737371112L)
   final class PeriodicTimerMachine(timerId: Long, startUs: Long, stepUs: Long, endUs: Long)
-      extends KeyedStateMachine[Long, TimerSeed, Tick] {
+      extends KeyedStateMachine[Long, TimerSeed, Tick] with CompactState {
     private var n = 0L
     override def onStart(key: Long, ctx: ReplayCtx[Tick]): Unit =
       if (startUs + stepUs <= endUs) ctx.callAt(startUs + stepUs, "tick")
@@ -330,6 +392,8 @@ object Machines {
       ctx.emit(Tick(timerId, ts, n))
       if (ts + stepUs <= endUs) ctx.callAt(ts + stepUs, "tick")
     }
+    def writeState(out: DataOutput): Unit = { out.writeByte(1); out.writeLong(n) }
+    def readState(in: DataInput): Unit = { readVersion(in, this, 1); n = in.readLong() }
   }
 
   // ---------- CDC compaction: emit only attribute CHANGES per key ----------
@@ -343,8 +407,9 @@ object Machines {
   final case class AttrEvent(user_id: Long, ts_us: Long, seq: Long, attr: String)
   final case class AttrChange(user_id: Long, ts_us: Long, attr: String)
 
+  @SerialVersionUID(248155442675358657L)
   final class ChangeMachine(userId: Long)
-      extends KeyedStateMachine[Long, AttrEvent, AttrChange] {
+      extends KeyedStateMachine[Long, AttrEvent, AttrChange] with CompactState {
     // mirrors the lag-window form EXACTLY, nulls included: the window
     // keeps a row iff prev IS NULL (no previous row OR a null attr —
     // the form conflates the two) or attr <> prev is TRUE; and lag()
@@ -357,5 +422,7 @@ object Machines {
       last = e.attr
       if (keep) ctx.emit(AttrChange(userId, ts, e.attr))
     }
+    def writeState(out: DataOutput): Unit = { out.writeByte(1); writeString(out, last) }
+    def readState(in: DataInput): Unit = { readVersion(in, this, 1); last = readString(in) }
   }
 }

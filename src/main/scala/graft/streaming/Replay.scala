@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.io.{DataInput, DataOutput}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions.{broadcast, col, floor, max, min, struct}
 import scala.collection.mutable
@@ -31,6 +33,16 @@ import scala.collection.mutable
   * reference resolves by schedule insertion order, which is not
   * reconstructible from data). Equal-due timers fire in scheduling (FIFO)
   * order, matching the reference's stable sort.
+  *
+  * Live state codec: [[AspStream]] stores each key's machine between
+  * micro-batches. By default it Java-serializes the machine, which costs
+  * class-descriptor parsing per key per batch and puts the descriptors
+  * in every blob. A machine whose state is plain values (numbers,
+  * strings, options, short sequences of them) should mix in
+  * [[CompactState]] and write those values itself. Stay on Java
+  * serialization when the state is an object graph whose shape still
+  * changes (e.g. a `Vector` of case classes), where its added-field and
+  * `readResolve` rules do the evolution without a hand-written reader.
   */
 trait KeyedStateMachine[K, I, O] extends Serializable {
   /** `on_start` (processor.py:185-186): fires before any event; virtual
@@ -50,6 +62,63 @@ trait KeyedStateMachine[K, I, O] extends Serializable {
     * reference loop exits only when the schedule is empty,
     * processor.py:67). */
   def onFinish(ctx: ReplayCtx[O]): Unit = ()
+}
+
+/** A [[KeyedStateMachine]]'s opt-in compact live-state codec. [[AspStream]]
+  * stores a machine that mixes this in as the bytes [[writeState]] writes,
+  * behind its own layout byte, with no Java serialization in the blob.
+  * [[Replay.run]] never calls either method.
+  *
+  * To restore a key, `AspStream` builds the machine with the query's
+  * CURRENT factory, without `onStart`, and [[readState]] fills in its
+  * state. So:
+  *  - the blob holds only what the writer writes: constructor parameters
+  *    (an expiry, a pattern, an interval) come from the factory, never
+  *    from the blob;
+  *  - the factory runs once per key per micro-batch, so it must stay
+  *    cheap and free of side effects.
+  *
+  * `readState` must consume exactly the bytes `writeState` wrote: a reader
+  * that leaves bytes unread or reads past the end fails the batch with an
+  * `IllegalStateException` naming the class, never a silently wrong
+  * machine. Evolution is the reader's: lead the bytes with a version byte
+  * of your own ([[CompactState.readVersion]]), and have a newer reader
+  * read every older version, giving added fields their defaults
+  * (StateEvolutionSpec runs that pattern through a checkpoint restart).
+  */
+trait CompactState { this: KeyedStateMachine[_, _, _] =>
+  def writeState(out: DataOutput): Unit
+  def readState(in: DataInput): Unit
+}
+
+object CompactState {
+  /** Length-prefixed UTF-8, `-1` for null; unlike `writeUTF`, no 64 KiB
+    * limit. `AspStream` writes timer tags the same way. */
+  def writeString(out: DataOutput, s: String): Unit =
+    if (s == null) out.writeInt(-1)
+    else { val b = s.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
+
+  def readString(in: DataInput): String = in.readInt() match {
+    case -1 => null
+    case n => val b = new Array[Byte](n); in.readFully(b); new String(b, UTF_8)
+  }
+
+  def writeOptDouble(out: DataOutput, o: Option[Double]): Unit = o match {
+    case Some(v) => out.writeBoolean(true); out.writeDouble(v)
+    case None => out.writeBoolean(false)
+  }
+
+  def readOptDouble(in: DataInput): Option[Double] =
+    if (in.readBoolean()) Some(in.readDouble()) else None
+
+  /** The version byte `m`'s writer led with; a byte outside
+    * `1..latest` fails loudly, naming the class. */
+  def readVersion(in: DataInput, m: AnyRef, latest: Int): Int = {
+    val v = in.readByte().toInt
+    if (v < 1 || v > latest) throw new IllegalStateException(
+      s"${m.getClass.getName} reads state versions 1..$latest, got $v")
+    v
+  }
 }
 
 /** Per-key execution context: emission buffer + timer schedule + virtual
